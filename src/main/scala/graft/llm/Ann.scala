@@ -173,11 +173,9 @@ object Ann {
     *     (Guide §4.4's asNondeterministic anti-duplication trick, applied
     *     to a built-in expression.)
     *
-    * Null semantics match the exploded sum: null elements (and dims present
-    * on only one side) contribute 0. The one observable difference: a pair
-    * whose overlapping products are ALL null scores 0.0 here where the
-    * exploded `sum` yielded NULL — visible only to callers filtering at
-    * `minCosine <= 0` over vectors with null elements. */
+    * Null elements (and dims present on only one side) contribute 0, so a
+    * pair whose overlapping products are ALL null scores 0.0, never NULL
+    * (pinned in the near-dup operators' contract and tests). */
   private[graft] def pairDot(a: Column, b: Column, dims: Int): Column = {
     val head = (1 to dims).map(i =>
       coalesce(try_element_at(a, lit(i)) * try_element_at(b, lit(i)),

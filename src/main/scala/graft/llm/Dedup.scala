@@ -453,14 +453,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Embedding-cosine near-duplicate pairs: random-hyperplane LSH buckets
-    * the corpus (one pass), pairs form only WITHIN a bucket, then exact
-    * cosine filters at `minCosine`. The per-pair dot product is computed
-    * relationally — unit-normalize per row, posexplode dimensions, equi-join
-    * on (bucket, dim), `sum(x*y)` — so the quadratic part stays inside
-    * whole-stage codegen instead of interpreted array lambdas. The classic
-    * recall/cost dial is `numPlanes` (fewer planes = bigger buckets =
-    * higher recall). */
   /** Conf key for [[embeddingNearDuplicates]]'s oversized-bucket cap
     * (used when the `maxBucketSize` argument is 0). Default 250: with a
     * FIXED numPlanes the per-bucket population grows linearly with the
@@ -478,6 +470,17 @@ object Dedup {
     * [[lastSplitReport]]("embedding"). */
   val EMBEDDING_MAX_BUCKET_KEY = "spark.graft.dedup.embedding.maxBucketSize"
 
+  /** Embedding-cosine near-duplicate pairs (a_id, b_id, cosine):
+    * random-hyperplane LSH buckets the corpus (one pass), pairs form only
+    * WITHIN a bucket, then exact cosine ([[Ann.pairDot]] over the unit
+    * vectors) filters at `minCosine`. The classic recall/cost dial is
+    * `numPlanes` (fewer planes = bigger buckets = higher recall).
+    *
+    * Null vector elements contribute 0 to both the norm and the dot
+    * product, so a pair whose overlapping products are ALL null (e.g. two
+    * vectors non-null at complementary positions) scores exactly 0.0 —
+    * not NULL — and is emitted whenever `minCosine <= 0`. All-zero (or
+    * all-null) vectors have no direction and never pair. */
   def embeddingNearDuplicates(
       df: DataFrame, idCol: String, vecCol: String,
       minCosine: Double = 0.95, numPlanes: Int = 4, dims: Int = 64,
@@ -651,7 +654,8 @@ object Dedup {
     * under the cap are untouched: the fast path adds one tiny k-row
     * aggregate and nothing else. The oversized-cluster decision is one
     * k-row collect — same bounded-driver contract as the other capped
-    * paths. */
+    * paths. Null elements score like in [[embeddingNearDuplicates]]: a
+    * pair whose products are all null has cosine 0.0. */
   def semanticNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String,
       k: Int, minCosine: Double = 0.95, iters: Int = 1,

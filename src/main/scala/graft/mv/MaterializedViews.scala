@@ -237,11 +237,10 @@ object MaterializedViews {
     // the first one already forces the full recompute. `appendOnly` =
     // every commit in EVERY changed relation's window either yields pure
     // INSERT feed rows (insert-only type cross-checked against the
-    // removes/tombstone evidence, the same defense ChangeFeed's appendLike
-    // applies — a mislabeled commit must degrade to the safe fallback,
-    // never to a wrong fold) or is a REWRITE that yields no feed rows at
-    // all (compaction / rebucket / vacuum — routine maintenance must not
-    // defeat the MIN/MAX fold). This is what makes MIN/MAX foldable below:
+    // removes/tombstone evidence — a mislabeled commit must degrade to the
+    // safe fallback, never to a wrong fold) or is a REWRITE that yields no
+    // feed rows at all (compaction / rebucket / vacuum — routine
+    // maintenance must not defeat the MIN/MAX fold). This is what makes MIN/MAX foldable below:
     // an extreme can only be EXTENDED by inserts, never retracted.
     var appendOnly = true
     changedPaths.foreach { cnorm =>

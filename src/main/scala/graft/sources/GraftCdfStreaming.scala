@@ -2,49 +2,67 @@ package graft.sources
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.meta.{DataFileInfo, Snapshot, TableInfo}
 import graft.tables.ChangeFeed
 
-/** STREAMING Change Data Feed:
-  * `readStream.format("graft").option("readChangeFeed", "true")` emits every
-  * row-level change as it commits, with the Delta-CDF column convention
-  * (`_change_type` / `_commit_version` / `_commit_timestamp`) appended —
-  * the batch `ChangeFeed` semantics, version by version, through the same
-  * admission-controlled micro-batch machinery as the plain source
-  * (maxFilesPerTrigger / maxBytesPerTrigger / Trigger.AvailableNow /
-  * checkpoint restart all work unchanged).
+/** The change-feed planner: maps each commit of a version window to the
+  * row-level changes it made, with the Delta-CDF column convention
+  * (`_change_type` / `_commit_version` / `_commit_timestamp`) appended.
+  * It serves both entry points:
+  *   - STREAMING, `readStream.format("graft").option("readChangeFeed",
+  *     "true")`: version by version through the same admission-controlled
+  *     micro-batch machinery as the plain source (maxFilesPerTrigger /
+  *     maxBytesPerTrigger / Trigger.AvailableNow / checkpoint restart);
+  *   - BATCH, `ChangeFeed.changes` / `graft_table_changes`: one
+  *     [[GraftCdfWindowScan]] over the whole window (`planWindow`).
   *
-  * Per-commit mapping:
-  *   - initial snapshot (or from `startingVersion`): merged current state,
-  *     `insert`;
-  *   - `append`/`create`/`streaming`: added rows, `insert`;
-  *   - `delta` (merge-on-read upsert): rows as written, `upsert`;
+  * Per-commit mapping (`planVersion` — the only place a commit type maps
+  * to a change shape):
+  *   - initial snapshot (streams without `startingVersion`): merged
+  *     current state, `insert`;
+  *   - `append`/`create`/`clone`/`streaming`: added rows, `insert`;
+  *   - `delta` (merge-on-read upsert): rows as written, `upsert` — unless
+  *     the commit carries tombstone markers, or the batch caller asked for
+  *     `resolveUpserts`, in which case it diffs like an update;
   *   - `overwrite`: removed files' merged pre-state `delete` + added files
   *     `insert`;
-  *   - `update`/`delete`/merge-upsert/`restore` (PK tables): a ZERO-SHUFFLE
-  *     row diff — the write path keeps pre- and post-files bucket-aligned,
-  *     so each task opens the touched (range, bucket) group's pre-state and
-  *     post-state with two merge readers (both PK-sorted) and emits
-  *     `insert`/`delete`/`update_preimage`/`update_postimage` from a single
-  *     sort-merge pass. Untouched groups are skipped by file-set equality,
-  *     so a restore streams O(changed partitions), not O(table);
-  *   - `compaction`/`alter`/`vacuum` markers: no logical change, skipped;
-  *   - non-PK data-changing rewrites have no per-key identity to diff
-  *     inside a task: the stream fails loudly (or skips them under
-  *     `ignoreChanges`) and points at the batch TVF.
+  *   - `update`/`delete`/merge-upsert/`restore` on PK tables: a
+  *     ZERO-SHUFFLE row diff — the write path keeps pre- and post-files
+  *     bucket-aligned, so each task opens one touched (range, bucket)
+  *     group's pre-state and post-state with merge readers (both
+  *     PK-sorted) and emits `insert`/`delete`/`update_preimage`/
+  *     `update_postimage` from a single sort-merge pass. Untouched groups
+  *     are skipped by file-set equality, so a restore reads O(changed
+  *     groups), not O(table);
+  *   - non-PK `update`/`delete` whose changes are deletion-vector growth:
+  *     each re-added file's newly masked rows are the deletions /
+  *     pre-images, the appended files the post-images;
+  *   - non-PK rewrites DVs cannot express, and non-PK `restore`: no key to
+  *     pair images inside a task. They come back as a [[CdfRowDiff]]; the
+  *     batch feed runs a whole-row count-aggregate diff on them, the stream
+  *     fails loudly (or skips them under `ignoreChanges`) and points at
+  *     the batch TVF;
+  *   - `compaction`/`alter`/`rebucket`/`vacuum` markers: no logical
+  *     change, skipped.
   *
-  * Scale: planning touches only each version's log metadata; the diff work
-  * is proportional to the data the commit rewrote and runs one task per
-  * touched bucket group with no exchange.
+  * Scale: planning touches only each version's log metadata. Files whose
+  * rows are read as-is (appends, upserts, post-images) from any number
+  * of versions bin-pack together, each file tagged with its own commit,
+  * so a 1000-version CDC window is a handful of tasks; the diff work is
+  * proportional to the data each commit rewrote, with no exchange.
   */
 class GraftCdfMicroBatchStream(
     spark: SparkSession,
@@ -52,11 +70,13 @@ class GraftCdfMicroBatchStream(
     tableInfo: TableInfo,
     baseSchema: StructType, // data + range columns, WITHOUT the change cols
     ignoreChanges: Boolean,
-    options: Map[String, String])
+    options: Map[String, String],
+    resolveUpserts: Boolean = false)
   extends GraftMicroBatchStream(
     spark, tablePath, tableInfo, baseSchema, ignoreChanges, options) {
 
   import GraftMicroBatchStream.REWRITE_TYPES
+  import GraftCdfMicroBatchStream._
 
   /** `startingVersion` skips the initial snapshot and begins the feed at
     * the given commit (Delta option parity). */
@@ -115,22 +135,6 @@ class GraftCdfMicroBatchStream(
   // planning
   // ------------------------------------------------------------------
 
-  private def tagAll(parts: Array[InputPartition], tpe: String, v: Long,
-      ts: Long): Array[InputPartition] =
-    parts.map(p => CdfTaggedPartition(p, tpe, v, ts): InputPartition)
-
-  /** Merged read of `files` (PK: one partition per bucket; non-PK: bins). */
-  private def mergedPartitions(files: Seq[DataFileInfo]): Array[InputPartition] =
-    if (files.isEmpty) Array.empty
-    else if (tableInfo.hasPrimaryKey) {
-      pkScanFor(files).planInputPartitions().collect {
-        case p: GraftPkInputPartition if p.groups.nonEmpty => p: InputPartition
-      }
-    } else {
-      checkNullFill(files)
-      binPack(files)
-    }
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftStreamOffset]
     val e = end.asInstanceOf[GraftStreamOffset]
@@ -145,132 +149,153 @@ class GraftCdfMicroBatchStream(
       val until = if (e.index >= 0) e.index.toInt else units.length
       val slice = units.slice(from, until)
       if (slice.isEmpty) return Array.empty
-      val ts = commitChanges(sv).tsMillis
-      tagAll(mergedPartitions(slice.flatten), "insert", sv, ts)
+      partitionsOf(merged(slice.flatten,
+        CdfTag("insert", sv, commitChanges(sv).tsMillis)))
     } else {
-      ((s.version + 1) to e.version).iterator
-        .flatMap(planVersion).toArray
-    }
-  }
-
-  private def planVersion(v: Long): Seq[InputPartition] = {
-    val c = commitChanges(v)
-    c.commitType match {
-      case t if REWRITE_TYPES.contains(t) => Nil
-      case "create" | "clone" | "append" | "streaming" =>
-        // self-contained new rows: raw file reads
-        checkNullFill(c.adds)
-        tagAll(binPack(c.adds), "insert", v, c.tsMillis).toSeq
-      case "delta" if !graft.meta.Tombstones.anyHas(c.adds) =>
-        checkNullFill(c.adds)
-        tagAll(binPack(c.adds), "upsert", v, c.tsMillis).toSeq
-      case "delta" =>
-        // tombstone-bearing delta (MERGE with a DELETE clause / tombstone
-        // DELETE): rows-as-written would misreport deleted keys as upserts;
-        // the exact pre/post diff emits insert/delete/update pairs instead
-        diffPartitions(v, c)
-      case "overwrite" =>
-        // a replacement is a statement about every changed file
-        tagAll(mergedPartitions(c.removed), "delete", v, c.tsMillis).toSeq ++
-          tagAll(mergedPartitions(c.adds), "insert", v, c.tsMillis).toSeq
-      case "delete" if !tableInfo.hasPrimaryKey &&
-          c.adds.isEmpty && c.removed.nonEmpty =>
-        // partition-scoped metadata-only DELETE (files removed whole,
-        // nothing rewritten): the removed files' surviving rows ARE the
-        // exact deletions — no pre/post pairing needed, same shape as the
-        // overwrite case's removed side (and exactly what the batch feed
-        // emits for this commit). DV-masked rows were already dead and do
-        // not re-report.
-        tagAll(mergedPartitions(c.removed), "delete", v, c.tsMillis).toSeq
-      case _ => // update | delete | merge-upsert | restore | unknown rewrite
-        if (tableInfo.hasPrimaryKey) diffPartitions(v, c)
-        else dvOnlyPartitions(v, c).getOrElse {
-          if (ignoreChanges) Nil
-          else throw new UnsupportedOperationException(
-            s"streaming change feed of $tablePath hit a '${c.commitType}' " +
+      partitionsOf(((s.version + 1) to e.version).flatMap { v =>
+        val units = planVersion(v)
+        units.collectFirst { case d: CdfRowDiff => d } match {
+          case None => units
+          case Some(_) if ignoreChanges => Nil
+          case Some(d) => throw new UnsupportedOperationException(
+            s"streaming change feed of $tablePath hit a '${d.commitType}' " +
             s"commit at version $v on a non-primary-key table; row-level " +
             "diffs need a key to pair pre/post images inside a task. Use the " +
             "batch feed (graft_table_changes) for this window, or set " +
             ".option(\"ignoreChanges\", \"true\") to skip such commits")
         }
+      })
+    }
+  }
+
+  /** Batch entry point: the task partitions of every commit in
+    * `[from, to]`, plus the row diffs (see [[CdfRowDiff]]) the tasks
+    * cannot express, for the caller to compute. */
+  def planWindow(from: Long, to: Long): (Array[InputPartition], Seq[CdfRowDiff]) = {
+    val units = (from to to).flatMap(planVersion)
+    (partitionsOf(units), units.collect { case d: CdfRowDiff => d })
+  }
+
+  /** Raw-read files of all units share size-packed bins (each file keeps
+    * its own commit tag); diff and merge partitions stay as planned. */
+  private def partitionsOf(units: Seq[CdfUnit]): Array[InputPartition] = {
+    val files = units.collect { case r: RawFiles => r.files.map(_ -> r.tag) }
+      .flatten
+    checkNullFill(files.map(_._1))
+    val tags = files.iterator.map(_._2)
+    val bins = binPack(files.map(_._1)).map { case b: GraftStreamFilesPartition =>
+      CdfFilesPartition(b, b.files.map(_ => tags.next())): InputPartition
+    }
+    bins ++ units.collect { case Planned(parts) => parts }.flatten
+  }
+
+  private def raw(files: Seq[DataFileInfo], tag: CdfTag): Seq[CdfUnit] =
+    if (files.isEmpty) Nil else Seq(RawFiles(files, tag))
+
+  /** Merged read of `files`: PK tables one partition per bucket, non-PK
+    * tables the files as they are (deletion vectors still mask). */
+  private def merged(files: Seq[DataFileInfo], tag: CdfTag): Seq[CdfUnit] =
+    if (!tableInfo.hasPrimaryKey) raw(files, tag)
+    else if (files.isEmpty) Nil
+    else Seq(Planned(pkScanFor(files).planInputPartitions().collect {
+      case p: GraftPkInputPartition if p.groups.nonEmpty =>
+        CdfTaggedPartition(p, tag): InputPartition
+    }.toSeq))
+
+  private def planVersion(v: Long): Seq[CdfUnit] = {
+    val c = commitChanges(v)
+    def tag(tpe: String) = CdfTag(tpe, v, c.tsMillis)
+    c.commitType match {
+      case t if REWRITE_TYPES.contains(t) => Nil
+      case "create" | "clone" | "append" | "streaming" =>
+        // self-contained new rows: raw file reads
+        raw(c.adds, tag("insert"))
+      case "delta" if !resolveUpserts && !graft.meta.Tombstones.anyHas(c.adds) =>
+        raw(c.adds, tag("upsert"))
+      case "delta" =>
+        // tombstone-bearing delta (MERGE with a DELETE clause / tombstone
+        // DELETE): rows-as-written would misreport deleted keys as upserts.
+        // Under resolveUpserts the caller wants each written row resolved
+        // against the bucket's v-1 state. Either way the exact pre/post
+        // diff emits insert/delete/update pairs instead
+        diffPartitions(v, c)
+      case "overwrite" =>
+        // a replacement is a statement about every changed file
+        merged(c.removed, tag("delete")) ++ merged(c.adds, tag("insert"))
+      case _ if tableInfo.hasPrimaryKey =>
+        diffPartitions(v, c) // update | delete | merge-upsert | restore
+      case "delete" if c.adds.isEmpty =>
+        // partition-scoped metadata-only DELETE (files removed whole,
+        // nothing rewritten): the removed files' surviving rows ARE the
+        // exact deletions. DV-masked rows were already dead and do not
+        // re-report.
+        raw(c.removed, tag("delete"))
+      case "restore" =>
+        // a restore is a whole-table statement: a file-level diff would
+        // lie when it re-adds a file under an older vector
+        val prev = Snapshot.replay(store, tablePath, v - 1).files
+        Seq(CdfRowDiff(v, c.tsMillis, c.commitType, DELETE_INSERT, prev,
+          Snapshot.replay(store, tablePath, v).files))
+      case _ => nonPkRewrite(v, c)
     }
   }
 
   /** A non-PK update/delete whose row-level changes are fully expressible
-    * as deletion-vector growth IS streamable without keys: each re-added
-    * file's newly-masked rows (dvNew \ dvOld — row indices against the
-    * immutable file) are the exact pre-images/deletions, and an update's
-    * appended image files are self-contained post-images. Commits that
-    * also REWROTE files (threshold fallback, fully-dead removal) still
-    * need the whole-row diff and stay unstreamable. */
-  private def dvOnlyPartitions(
-      v: Long, c: VersionChanges): Option[Seq[InputPartition]] = {
-    if (c.commitType != "update" && c.commitType != "delete") return None
-    if (c.removed.nonEmpty || c.adds.isEmpty) return None
+    * as deletion-vector growth needs no keys: each re-added file's
+    * newly-masked rows (dvNew \ dvOld — row indices against the immutable
+    * file) are the exact pre-images/deletions, and an update's appended
+    * image files are self-contained post-images. Commits that also
+    * REWROTE files (threshold fallback, fully-dead removal) add a whole-row
+    * diff of the removed files against the fresh adds. */
+  private def nonPkRewrite(v: Long, c: VersionChanges): Seq[CdfUnit] = {
     val prevByPath = Snapshot.replay(store, tablePath, v - 1)
       .files.map(f => f.path -> f).toMap
     val (reAdds, freshAdds) = c.adds.partition(f => prevByPath.contains(f.path))
-    if (reAdds.isEmpty ||
-        !reAdds.forall(f => f.hasDv && prevByPath(f.path).dvPath != f.dvPath))
-      return None
-    val preLabel =
-      if (c.commitType == "delete") "delete" else "update_preimage"
-    val tz = org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
-      .sessionState.conf.sessionLocalTimeZone
-    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(partSchema)
-    val dvParts: Seq[InputPartition] = reAdds.map { f =>
-      val values = InternalRow.fromSeq(partSchema.fields.toSeq.map { sf =>
-        GraftFileIndex.castPartitionValue(
-          f.partitionValues.getOrElse(sf.name, null), sf, tz)
-      })
-      CdfDvPartition(f.resolvedPath(tablePath), f.size,
-        proj.apply(values).copy(),
-        prevByPath(f.path).dvPath, f.dvPath, preLabel, v, c.tsMillis)
-    }
-    val postParts =
-      if (freshAdds.isEmpty) Nil
-      else {
-        checkNullFill(freshAdds)
-        tagAll(binPack(freshAdds), "update_postimage", v, c.tsMillis).toSeq
-      }
-    Some(dvParts ++ postParts)
+    val dvAdds = reAdds.filter(f =>
+      f.hasDv && prevByPath(f.path).dvPath != f.dvPath)
+    val labels =
+      if (c.commitType == "delete") DELETE_INSERT
+      else ("update_preimage", "update_postimage")
+    val partRow = partitionRows()
+    val dvParts = Planned(dvAdds.map(f => CdfDvPartition(
+      f.resolvedPath(tablePath), f.size, partRow(f),
+      prevByPath(f.path).dvPath, f.dvPath, CdfTag(labels._1, v, c.tsMillis))))
+    val dvOnly = (c.commitType == "update" || c.commitType == "delete") &&
+      c.removed.isEmpty && reAdds.nonEmpty && dvAdds.size == reAdds.size
+    if (dvOnly) dvParts +: raw(freshAdds, CdfTag(labels._2, v, c.tsMillis))
+    else Seq(dvParts,
+      CdfRowDiff(v, c.tsMillis, c.commitType, labels, c.removed, freshAdds))
   }
 
-  /** Pair each touched (range, bucket) group's pre-state (version v-1) with
-    * its post-state (version v); groups with identical file sets diff to
-    * nothing and are skipped. */
-  private def diffPartitions(v: Long, c: VersionChanges): Seq[InputPartition] = {
-    val touched = (c.adds ++ c.removed).map(f => (f.rangeKey, f.bucket)).toSet
-    if (touched.isEmpty) return Nil
+  /** Pair each touched (range, bucket) group's pre-state (version v-1)
+    * with its post-state (version v); groups with identical file sets diff
+    * to nothing and are skipped. A commit that changed the bucket count
+    * (a restore across a rebucket) moves keys between bucket ids, so its
+    * groups pair by range partition alone, each side merging its buckets
+    * back into one key order. */
+  private def diffPartitions(v: Long, c: VersionChanges): Seq[CdfUnit] = {
     val prevSnap = Snapshot.replay(store, tablePath, v - 1)
     val snap = Snapshot.replay(store, tablePath, v)
-    def filesOf(s: Snapshot) =
-      s.files.filter(f => touched((f.rangeKey, f.bucket)))
-    val preParts = pkScanFor(filesOf(prevSnap)).planInputPartitions()
-      .collect { case p: GraftPkInputPartition => p }
-    val postParts = pkScanFor(filesOf(snap)).planInputPartitions()
-      .collect { case p: GraftPkInputPartition => p }
-    def keyed(parts: Array[GraftPkInputPartition]) = parts.map(p =>
-      p.bucket -> p.groups.map(g => g.partitionValues -> g).toMap).toMap
-    val pre = keyed(preParts)
-    val post = keyed(postParts)
-    def fileSet(g: Option[GraftFileGroup]): Set[(String, Long)] =
-      g.map(_.files.map(f => (f.absPath, f.writeVersion)).toSet)
-        .getOrElse(Set.empty)
-    val out = Seq.newBuilder[InputPartition]
-    (pre.keySet ++ post.keySet).toSeq.sorted.foreach { b =>
-      val pg = pre.getOrElse(b, Map.empty)
-      val qg = post.getOrElse(b, Map.empty)
-      (pg.keySet ++ qg.keySet).foreach { pv =>
-        val l = pg.get(pv)
-        val r = qg.get(pv)
-        if (fileSet(l) != fileSet(r)) {
-          out += CdfDiffPartition(b, l, r, v, c.tsMillis)
-        }
-      }
+    val relayout = prevSnap.tableInfo.bucketNum != snap.tableInfo.bucketNum
+    def key(f: DataFileInfo) = (f.rangeKey, if (relayout) -1 else f.bucket)
+    val touched = (c.adds ++ c.removed).map(key).toSet
+    def groups(s: Snapshot) = s.files.filter(f => touched(key(f))).groupBy(key)
+    val (pre, post) = (groups(prevSnap), groups(snap))
+    def fileSet(k: (String, Int), g: Map[(String, Int), Seq[DataFileInfo]]) =
+      g.getOrElse(k, Nil).map(f => (f.path, f.writeVersion)).toSet
+    val changed = touched.filter(k => fileSet(k, pre) != fileSet(k, post))
+    // plan each side once, then hand every changed key its merge groups
+    def planned(g: Map[(String, Int), Seq[DataFileInfo]]) = {
+      val files = changed.toSeq.flatMap(g.getOrElse(_, Nil))
+      val keyOf = files.map(f => f.resolvedPath(tablePath) -> key(f)).toMap
+      pkScanFor(files).planInputPartitions().iterator
+        .collect { case p: GraftPkInputPartition => p.groups }.flatten
+        .toSeq.groupBy(g => keyOf(g.files.head.absPath))
     }
-    out.result()
+    val (preGroups, postGroups) = (planned(pre), planned(post))
+    Seq(Planned(changed.toSeq.sorted.map(k => CdfDiffPartition(
+      preGroups.getOrElse(k, Nil).toArray,
+      postGroups.getOrElse(k, Nil).toArray, v, c.tsMillis))))
   }
 
   // ------------------------------------------------------------------
@@ -289,9 +314,43 @@ class GraftCdfMicroBatchStream(
   }
 }
 
+object GraftCdfMicroBatchStream {
+  private val DELETE_INSERT = ("delete", "insert")
+
+  /** What one commit contributes to a window's plan. */
+  private[sources] sealed trait CdfUnit
+  /** Files read as they are, every row tagged `tag`. */
+  private[sources] case class RawFiles(files: Seq[DataFileInfo], tag: CdfTag)
+    extends CdfUnit
+  /** Partitions that need their own reader (merge, diff, DV selection). */
+  private[sources] case class Planned(parts: Seq[InputPartition]) extends CdfUnit
+}
+
+/** A non-PK commit the task-local readers cannot express — a rewrite
+  * beyond deletion vectors, or a restore: the rows of `pre` (live at
+  * `version - 1`) and of `post` (live at `version`) differ as whole-row
+  * multisets. Rows only in `pre` are labelled `labels._1`, rows only in
+  * `post` `labels._2`. The batch feed computes the difference with a
+  * count aggregate; the stream refuses such commits. */
+case class CdfRowDiff(
+    version: Long,
+    tsMillis: Long,
+    commitType: String,
+    labels: (String, String),
+    pre: Seq[DataFileInfo],
+    post: Seq[DataFileInfo])
+  extends GraftCdfMicroBatchStream.CdfUnit
+
+/** The change columns every row of a partition (or file) carries. */
+case class CdfTag(changeType: String, version: Long, tsMillis: Long)
+
 /** Appends the three CDF columns to whatever `inner` emits. */
-case class CdfTaggedPartition(
-    inner: InputPartition, changeType: String, version: Long, tsMillis: Long)
+case class CdfTaggedPartition(inner: InputPartition, tag: CdfTag)
+  extends InputPartition
+
+/** A size-packed bin of raw files, `tags(i)` the change columns of
+  * `bin.files(i)`'s rows. */
+case class CdfFilesPartition(bin: GraftStreamFilesPartition, tags: Array[CdfTag])
   extends InputPartition
 
 /** One deletion-vector re-add: the file's rows at indices in
@@ -302,16 +361,15 @@ case class CdfDvPartition(
     partValues: InternalRow,
     dvOld: String,
     dvNew: String,
-    changeType: String,
-    version: Long,
-    tsMillis: Long)
+    tag: CdfTag)
   extends InputPartition
 
-/** One touched (range, bucket) group's pre/post pair for a rewrite diff. */
+/** One touched group's pre/post states for a rewrite diff: usually one
+  * (range, bucket) merge group per side, every bucket of a range
+  * partition when the commit changed the bucket count. */
 case class CdfDiffPartition(
-    bucket: Int,
-    pre: Option[GraftFileGroup],
-    post: Option[GraftFileGroup],
+    pre: Array[GraftFileGroup],
+    post: Array[GraftFileGroup],
     version: Long,
     tsMillis: Long)
   extends InputPartition
@@ -323,20 +381,15 @@ case class GraftCdfReaderFactory(
     compareOrdinals: Array[Int])
   extends PartitionReaderFactory {
 
-  private def changeRow(tpe: String, v: Long, tsMillis: Long): InternalRow =
+  private def changeRow(tag: CdfTag): InternalRow =
     new GenericInternalRow(Array[Any](
-      UTF8String.fromString(tpe), v, tsMillis * 1000L))
+      UTF8String.fromString(tag.changeType), tag.version, tag.tsMillis * 1000L))
 
-  private def tagged(
-      it: PartitionReader[InternalRow], tpe: String, v: Long,
-      ts: Long): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val joined = new JoinedRow
-      private val tag = changeRow(tpe, v, ts)
-      override def next(): Boolean = it.next()
-      override def get(): InternalRow = joined(it.get(), tag)
-      override def close(): Unit = it.close()
-    }
+  private def tagged(rows: Iterator[InternalRow], tag: CdfTag): Iterator[InternalRow] = {
+    val joined = new JoinedRow
+    val t = changeRow(tag)
+    rows.map(joined(_, t))
+  }
 
   /** Row ordering over the PK columns (both sides emit PK-sorted rows). */
   private def keyOrdering: Ordering[InternalRow] =
@@ -401,18 +454,23 @@ case class GraftCdfReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case CdfTaggedPartition(ip, tpe, v, ts) =>
-        tagged(inner.createReader(ip), tpe, v, ts)
-      case d: CdfDiffPartition => diffReader(d)
-      case d: CdfDvPartition => tagged(dvSelectionReader(d),
-        d.changeType, d.version, d.tsMillis)
+      case CdfTaggedPartition(ip, tag) =>
+        val r = inner.createReader(ip)
+        GraftStreamReaderFactory.readerOf(tagged(
+          Iterator.continually(r).takeWhile(_.next()).map(_.get()), tag))
+      case CdfFilesPartition(bin, tags) =>
+        GraftStreamReaderFactory.readerOf(bin.files.iterator.zip(tags)
+          .flatMap { case (f, tag) => tagged(inner.fileRows(f), tag) })
+      case d: CdfDiffPartition => GraftStreamReaderFactory.readerOf(diffRows(d))
+      case d: CdfDvPartition =>
+        GraftStreamReaderFactory.readerOf(tagged(dvSelectedRows(d), d.tag))
       case other => inner.createReader(other)
     }
 
-  /** Reads ONLY the rows of a file whose index the new vector masks beyond
-    * the old — the inverse of the scan-side mask (selection, not
-    * exclusion) — and strips the row-index column back out. */
-  private def dvSelectionReader(d: CdfDvPartition): PartitionReader[InternalRow] = {
+  /** The rows of a file whose index the new vector masks beyond the old —
+    * the inverse of the scan-side mask (selection, not exclusion) — with
+    * the row-index column stripped back out. */
+  private def dvSelectedRows(d: CdfDvPartition): Iterator[InternalRow] = {
     val s = inner.dvSupport
     val dvNew = DeletionVectors.read(s.tableRoot, s.conf.value, d.dvNew)
     val delta =
@@ -425,81 +483,73 @@ case class GraftCdfReaderFactory(
     val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
       .create(s.rowTypes.indices.filterNot(_ == s.idxOrd).map(i =>
         BoundReference(i, s.rowTypes(i), nullable = true)))
-    val it = inner.rawRows(inner.dvReadFunc, pf)
+    inner.rawRows(inner.dvReadFunc, pf)
       .filter(r => delta.contains(r.getLong(s.idxOrd)))
       .map(proj)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
+  }
+
+  /** One diff side's merged rows in key order, COPIED (readers reuse
+    * buffers). Several groups (a bucket-count change) hold disjoint keys,
+    * each group PK-sorted: a k-way merge restores one key order. */
+  private def sideRows(groups: Array[GraftFileGroup],
+      keyOrd: Ordering[InternalRow]): Iterator[InternalRow] = {
+    val its = groups.toSeq.map { g =>
+      val r = inner.createReader(GraftPkInputPartition(0, Array(g)))
+      Iterator.continually(r).takeWhile(_.next()).map(_.get().copy()).buffered
+    }.filter(_.hasNext)
+    if (its.size <= 1) its.headOption.getOrElse(Iterator.empty)
+    else new Iterator[InternalRow] {
+      private val heads = mutable.PriorityQueue(its: _*)(
+        Ordering.by[scala.collection.BufferedIterator[InternalRow], InternalRow](_.head)(keyOrd)
+          .reverse)
+      override def hasNext: Boolean = heads.nonEmpty
+      override def next(): InternalRow = {
+        val it = heads.dequeue()
+        val row = it.next()
+        if (it.hasNext) heads.enqueue(it)
+        row
+      }
     }
   }
 
   /** Single-pass sort-merge diff of a group's pre/post states. */
-  private def diffReader(d: CdfDiffPartition): PartitionReader[InternalRow] = {
-    def side(g: Option[GraftFileGroup]): PartitionReader[InternalRow] =
-      inner.createReader(GraftPkInputPartition(d.bucket, g.toArray))
-    val preR = side(d.pre)
-    val postR = side(d.post)
+  private def diffRows(d: CdfDiffPartition): Iterator[InternalRow] = {
     val keyOrd = keyOrdering
     val valuesEqual = valuesEqualFn
+    val pre = sideRows(d.pre, keyOrd).buffered
+    val post = sideRows(d.post, keyOrd).buffered
     val joined = new JoinedRow
-    val insertTag = changeRow("insert", d.version, d.tsMillis)
-    val deleteTag = changeRow("delete", d.version, d.tsMillis)
-    val updPreTag = changeRow("update_preimage", d.version, d.tsMillis)
-    val updPostTag = changeRow("update_postimage", d.version, d.tsMillis)
-
-    new PartitionReader[InternalRow] {
-      // one-row lookahead per side; rows COPIED (readers reuse buffers)
-      private var pre: InternalRow = advance(preR)
-      private var post: InternalRow = advance(postR)
-      private val pending = mutable.Queue.empty[InternalRow]
-      private var current: InternalRow = _
-
-      private def advance(r: PartitionReader[InternalRow]): InternalRow =
-        if (r.next()) r.get().copy() else null
-
-      override def next(): Boolean = {
-        while (pending.isEmpty && (pre != null || post != null)) {
-          if (pre == null) {
-            pending.enqueue(joined(post, insertTag).copy())
-            post = advance(postR)
-          } else if (post == null) {
-            pending.enqueue(joined(pre, deleteTag).copy())
-            pre = advance(preR)
-          } else {
-            val c = keyOrd.compare(pre, post)
-            if (c < 0) {
-              pending.enqueue(joined(pre, deleteTag).copy())
-              pre = advance(preR)
-            } else if (c > 0) {
-              pending.enqueue(joined(post, insertTag).copy())
-              post = advance(postR)
-            } else {
-              if (!valuesEqual(pre, post)) {
-                pending.enqueue(joined(pre, updPreTag).copy())
-                pending.enqueue(joined(post, updPostTag).copy())
-              } // identical rows carried over by the rewrite: suppressed
-              pre = advance(preR)
-              post = advance(postR)
-            }
+    def tag(tpe: String) = changeRow(CdfTag(tpe, d.version, d.tsMillis))
+    val (insertTag, deleteTag, updPreTag, updPostTag) = (tag("insert"),
+      tag("delete"), tag("update_preimage"), tag("update_postimage"))
+    def out(row: InternalRow, t: InternalRow) = joined(row, t).copy()
+    Iterator.unfold(()) { _ =>
+      if (!pre.hasNext && !post.hasNext) None
+      else {
+        val c =
+          if (!pre.hasNext) 1
+          else if (!post.hasNext) -1
+          else keyOrd.compare(pre.head, post.head)
+        val rows =
+          if (c < 0) Seq(out(pre.next(), deleteTag))
+          else if (c > 0) Seq(out(post.next(), insertTag))
+          else {
+            val (a, b) = (pre.next(), post.next())
+            // identical rows carried over by the rewrite: suppressed
+            if (valuesEqual(a, b)) Nil
+            else Seq(out(a, updPreTag), out(b, updPostTag))
           }
-        }
-        if (pending.isEmpty) false
-        else { current = pending.dequeue(); true }
+        Some((rows, ()))
       }
-
-      override def get(): InternalRow = current
-      override def close(): Unit = { preR.close(); postR.close() }
-    }
+    }.flatten
   }
 }
 
-/** Scan + builder for `readChangeFeed` reads. Batch consumers use the
-  * `graft_table_changes` TVF / `ChangeFeed.changes`; this scan exists for
-  * the STREAMING entry point. */
+/** Scan + builder for `readStream ... option("readChangeFeed", "true")`:
+  * the micro-batch entry point of [[GraftCdfMicroBatchStream]]. A batch
+  * read with that option is refused — the window's bounds and
+  * `resolveUpserts` are `ChangeFeed.changes` arguments, read through
+  * [[GraftCdfWindowScan]]. */
 class GraftCdfScan(
     spark: SparkSession,
     path: String,
@@ -522,6 +572,51 @@ class GraftCdfScan(
       options.exists { case (k, v) =>
         k.equalsIgnoreCase("ignoreChanges") && v.toBoolean },
       options)
+}
+
+/** Batch read of one change window: a single DSv2 scan whose partitions
+  * the planner computed up front (`planWindow`). */
+class GraftCdfWindowScan(
+    planner: GraftCdfMicroBatchStream,
+    parts: Array[InputPartition],
+    schema: StructType,
+    path: String)
+  extends Scan with Batch {
+  override def readSchema(): StructType = schema
+  override def description(): String = s"GraftCdfWindowScan $path"
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] = parts
+  override def createReaderFactory(): PartitionReaderFactory =
+    planner.createReaderFactory()
+}
+
+object GraftCdfWindowScan {
+  /** The change rows of `[from, to]` the planner's tasks produce, as a
+    * DataFrame over one scan (data, then range, then change columns, all
+    * nullable, in the schema of `end`, the snapshot at `to`), plus the
+    * row diffs the tasks cannot express. */
+  def read(
+      spark: SparkSession, path: String, end: Snapshot, from: Long,
+      resolveUpserts: Boolean): (DataFrame, Seq[CdfRowDiff]) = {
+    val ti = end.tableInfo
+    val base = GraftPkScan.asNullable(
+      StructType(ti.dataSchema.fields ++ ti.rangePartitionSchema.fields))
+    val planner = new GraftCdfMicroBatchStream(spark, path, ti, base,
+      ignoreChanges = false, Map.empty, resolveUpserts)
+    val (parts, diffs) = planner.planWindow(from, end.version)
+    val scan = new GraftCdfWindowScan(planner, parts, StructType(base.fields ++
+      GraftCdfScan.CHANGE_FIELDS.map(_.copy(nullable = true))), path)
+    val table = new Table with SupportsRead {
+      override def name(): String = scan.description()
+      override def schema(): StructType = scan.readSchema()
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_READ)
+      override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+        () => scan
+    }
+    (SparkShims.ofRows(spark, DataSourceV2Relation.create(
+      table, None, None, CaseInsensitiveStringMap.empty())), diffs)
+  }
 }
 
 object GraftCdfScan {

@@ -313,9 +313,13 @@ class GraftMicroBatchStream(
 
   /** A batch-independent PK scan pinned to the merge layout: its reader
     * factory and its per-batch partition planning agree on the merged row
-    * layout because both come from the same scan parameters. */
+    * layout because both come from the same scan parameters. Files from
+    * before a rebucket keep their own bucket ids, so the scan plans as
+    * many buckets as any file names. */
   protected def pkScanFor(files: Seq[DataFileInfo]): GraftPkScan =
-    GraftPkScan(spark, tablePath, tableInfo, files, dataCols, partSchema,
+    GraftPkScan(spark, tablePath,
+      tableInfo.copy(bucketNum = (tableInfo.bucketNum +: files.map(_.bucket + 1)).max),
+      files, dataCols, partSchema,
       Nil, GraftMergeOperator.declaredOperators(tableInfo),
       forceMergeLayout = true)
 
@@ -386,6 +390,16 @@ class GraftMicroBatchStream(
     }
   }
 
+  /** A file's range-partition values as the readers' partition row. */
+  protected def partitionRows(): DataFileInfo => InternalRow = {
+    val tz = castToImpl(spark).sessionState.conf.sessionLocalTimeZone
+    val proj = UnsafeProjection.create(partSchema)
+    f => proj.apply(InternalRow.fromSeq(partSchema.fields.toSeq.map { sf =>
+      GraftFileIndex.castPartitionValue(
+        f.partitionValues.getOrElse(sf.name, null), sf, tz)
+    })).copy()
+  }
+
   /** Bin-pack raw files by size: one task per file would mean millions of
     * tasks at scale — pack into ~maxPartitionBytes bins (first-fit over the
     * listing order, which groups same-partition files together). Each file
@@ -393,14 +407,9 @@ class GraftMicroBatchStream(
     * without it a small-file table packs thousands of footer-opens into one
     * task. */
   protected def binPack(files: Seq[DataFileInfo]): Array[InputPartition] = {
-    val tz = castToImpl(spark).sessionState.conf.sessionLocalTimeZone
-    val proj = UnsafeProjection.create(partSchema)
+    val partRow = partitionRows()
     val triples = files.map { f =>
-      val values = InternalRow.fromSeq(partSchema.fields.toSeq.map { sf =>
-        GraftFileIndex.castPartitionValue(
-          f.partitionValues.getOrElse(sf.name, null), sf, tz)
-      })
-      (f.resolvedPath(tablePath), f.size, proj.apply(values).copy(), f.dvPath,
+      (f.resolvedPath(tablePath), f.size, partRow(f), f.dvPath,
         graft.meta.Tombstones.fileHas(f))
     }
     val conf = castToImpl(spark).sessionState.conf
@@ -499,7 +508,7 @@ object GraftMicroBatchStream {
   /** Commit types whose feed rows are pure INSERTS when the commit also
     * carries no removes and no tombstone markers ("delta" excluded — its
     * adds may OVERWRITE existing keys). Consumers must still cross-check
-    * the removes/tombstone evidence (see ChangeFeed's appendLike). */
+    * the removes/tombstone evidence. */
   val INSERT_ONLY_TYPES: Set[String] =
     Set("create", "clone", "append", "streaming")
   /** Commits that only rewrite existing rows into new files. */
@@ -578,44 +587,51 @@ case class GraftStreamReaderFactory(
       pkFactory.getOrElse(throw new IllegalStateException(
         "merge partition planned for a non-PK stream")).createReader(pk)
     case _ =>
-      val bin = p.asInstanceOf[GraftStreamFilesPartition]
-      def rows = rawRows _
-      val iter: Iterator[InternalRow] = bin.files.iterator.flatMap {
-        case (absPath, length, partValues, dvRel, hasTombstones) =>
-          val pf = PartitionedFile(partValues,
-            SparkPath.fromPathString(absPath), 0, length, Array.empty, 0L,
-            length, Map.empty)
-          if (hasTombstones) {
-            // withhold delete-marker rows; strip the marker column
-            val s = tsSupport
-            val proj = UnsafeProjection.create(
-              s.rowTypes.indices.filterNot(_ == s.tombOrd).map(i =>
-                org.apache.spark.sql.catalyst.expressions.BoundReference(
-                  i, s.rowTypes(i), nullable = true)))
-            rows(tsReadFunc, pf)
-              .filter(r => r.isNullAt(s.tombOrd) || !r.getBoolean(s.tombOrd))
-              .map(proj)
-          } else if (dvRel.isEmpty) rows(readFunc, pf)
-          else {
-            val s = dvSupport
-            val bm = DeletionVectors.read(s.tableRoot, s.conf.value, dvRel)
-            val proj = UnsafeProjection.create(
-              s.rowTypes.indices.filterNot(_ == s.idxOrd).map(i =>
-                org.apache.spark.sql.catalyst.expressions.BoundReference(
-                  i, s.rowTypes(i), nullable = true)))
-            rows(dvReadFunc, pf)
-              .filter(r => !bm.contains(r.getLong(s.idxOrd)))
-              .map(proj)
-          }
-      }
-      new PartitionReader[InternalRow] {
-        private var current: InternalRow = _
-        override def next(): Boolean =
-          if (iter.hasNext) { current = iter.next(); true } else false
-        override def get(): InternalRow = current
-        override def close(): Unit = ()
-      }
+      GraftStreamReaderFactory.readerOf(
+        p.asInstanceOf[GraftStreamFilesPartition].files.iterator.flatMap(fileRows))
   }
+
+  /** One bin entry's rows, with deletion-vector-masked and delete-marker
+    * rows dropped. */
+  def fileRows(file: (String, Long, InternalRow, String, Boolean)): Iterator[InternalRow] = {
+    val (absPath, length, partValues, dvRel, hasTombstones) = file
+    val pf = PartitionedFile(partValues,
+      SparkPath.fromPathString(absPath), 0, length, Array.empty, 0L,
+      length, Map.empty)
+    if (hasTombstones) {
+      // withhold delete-marker rows; strip the marker column
+      val s = tsSupport
+      val proj = UnsafeProjection.create(
+        s.rowTypes.indices.filterNot(_ == s.tombOrd).map(i =>
+          org.apache.spark.sql.catalyst.expressions.BoundReference(
+            i, s.rowTypes(i), nullable = true)))
+      rawRows(tsReadFunc, pf)
+        .filter(r => r.isNullAt(s.tombOrd) || !r.getBoolean(s.tombOrd))
+        .map(proj)
+    } else if (dvRel.isEmpty) rawRows(readFunc, pf)
+    else {
+      val s = dvSupport
+      val bm = DeletionVectors.read(s.tableRoot, s.conf.value, dvRel)
+      val proj = UnsafeProjection.create(
+        s.rowTypes.indices.filterNot(_ == s.idxOrd).map(i =>
+          org.apache.spark.sql.catalyst.expressions.BoundReference(
+            i, s.rowTypes(i), nullable = true)))
+      rawRows(dvReadFunc, pf)
+        .filter(r => !bm.contains(r.getLong(s.idxOrd)))
+        .map(proj)
+    }
+  }
+}
+
+object GraftStreamReaderFactory {
+  def readerOf(iter: Iterator[InternalRow]): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean =
+        if (iter.hasNext) { current = iter.next(); true } else false
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
+    }
 }
 
 /** Adds `toMicroBatchStream` to any batch scan the builders produce — the

@@ -1,10 +1,11 @@
 package graft.tables
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.meta.{DataFileInfo, Snapshot, SnapshotManagement}
-import graft.sources.GraftRead
+import graft.sources.{CdfRowDiff, GraftCdfWindowScan, GraftRead}
 
 /** Change Data Feed computed from the commit log — `changes(start, end)`
   * returns every row-level change in the version window as a DataFrame with
@@ -15,47 +16,37 @@ import graft.sources.GraftRead
   * The reference has no change feed; its log (Cassandra `meta/MetaCommit`)
   * records the same add/remove file sets this implementation diffs. Unlike
   * Delta's CDF (which writes extra change files at commit time), Graft
-  * derives changes ON READ from the files the commit added and removed:
+  * derives changes ON READ from the files each commit added and removed.
+  * The batch feed and the streaming `readChangeFeed` source share one
+  * planner, [[graft.sources.GraftCdfMicroBatchStream]], which holds the
+  * per-commit mapping. Here the whole window reads through ONE DSv2 scan:
+  *   - files whose rows are the changes (appends, raw upserts, update
+  *     post-images) read as they are, bin-packed across versions with each
+  *     file tagged by its own commit;
+  *   - each PK rewrite (update/delete/merge/restore, tombstone deltas, and
+  *     every delta under `resolveUpserts`) diffs its touched (range,
+  *     bucket) groups' pre- and post-state by a task-local sort-merge, with
+  *     no exchange — key only in post → `insert`, only in pre → `delete`,
+  *     any other column changed → `update_preimage` + `update_postimage`,
+  *     rows the rewrite carried over untouched suppressed;
+  *   - non-PK deletion-vector commits read just the newly masked rows.
   *
-  *   - `append`/`streaming` commits: added rows, `insert`;
-  *   - `delta` (merge-on-read upsert): rows as written, `upsert` — whether
-  *     each row was an insert or an update is not recorded at write time and
-  *     resolving it would cost a join against the whole pre-state, which the
-  *     caller can do if they need it;
-  *   - `update`/`delete`/`upsert` (merge-mode) commits: the removed files'
-  *     merged pre-state is diffed against the added files' post-state. PK
-  *     tables diff by key (full-outer join on range+hash columns): key only
-  *     in post → `insert`, only in pre → `delete`, both sides with any
-  *     non-key column changed → `update_preimage` + `update_postimage`.
-  *     Rows the rewrite carried over untouched are suppressed. Non-PK
-  *     tables diff by whole row (`EXCEPT ALL` both ways);
-  *   - `overwrite`: removed rows `delete`, added rows `insert` (a
-  *     replacement is a statement about every row, not a diff);
-  *   - `compaction`/`alter`: pure rewrites, no logical change, skipped.
+  * What no task can express — a non-PK rewrite beyond deletion vectors,
+  * or a non-PK restore: there is no key to pair images — the planner hands
+  * back as (pre files, post files), and this object diffs by whole row:
+  * one count aggregate over all such commits of the window, each surviving
+  * row emitted |count| times.
   *
-  * Scale: each version touches only the files that commit added/removed —
-  * cost is proportional to rewritten data, never table size. The diff join
-  * runs distributed; nothing is collected. Schema evolution inside the
-  * window is handled by aligning each version's frame to its own snapshot
-  * schema and unioning by name with null-fill.
+  * Columns: the window's last schema (data, then range columns), then the
+  * three change columns, all nullable; files from before a schema ADD
+  * null-fill the newer columns. Cost is proportional to the data the
+  * window's commits added or rewrote, never to table size; nothing is
+  * collected.
   */
-/** Serializable carrier for a roaring bitmap shipped into a UDF closure —
-  * deserialized lazily once per executor. */
-private class DvBitmapHolder(bytes: Array[Byte]) extends Serializable {
-  @transient private lazy val bm = graft.sources.DeletionVectors.fromBytes(bytes)
-  def contains(i: Long): Boolean = bm.contains(i)
-}
-
 object ChangeFeed {
   val CHANGE_TYPE = "_change_type"
   val COMMIT_VERSION = "_commit_version"
   val COMMIT_TIMESTAMP = "_commit_timestamp"
-
-  /** Pure rewrites: no logical row change. Shared with the streaming
-    * source — a new pure-rewrite commit type added to one reader but not
-    * the other would make batch and stream feeds diverge silently. */
-  private val REWRITE_TYPES =
-    graft.sources.GraftMicroBatchStream.REWRITE_TYPES
 
   /** Backtick-escape a column name for `col()` — a column literally named
     * `a.b` must resolve as one column, not a struct path. */
@@ -68,8 +59,7 @@ object ChangeFeed {
     * resolves to `insert` or an `update_preimage`/`update_postimage` pair.
     * Consumers that fold ±weighted images (incremental MV refresh) need
     * the pre-images; plain CDC mirroring does not and should keep the
-    * default. Cost: ∝ the touched buckets' data per delta commit, and
-    * delta commits no longer collapse into append-runs. */
+    * default. Cost: ∝ the touched buckets' data per delta commit. */
   def changes(
       spark: SparkSession,
       tablePath: String,
@@ -83,358 +73,55 @@ object ChangeFeed {
     val end = if (endVersion < 0L) latest else endVersion
     require(startVersion >= 0 && startVersion <= end && end <= latest,
       s"change window [$startVersion, $end] out of range [0, $latest] for $path")
-
-    // Plan-size discipline for long windows: CONSECUTIVE append-like
-    // versions (create/append/streaming, and tombstone-free delta — the
-    // versions that pile up by the thousands under CDC ingest) collapse
-    // into ONE multi-file scan per run, with each file's version/
-    // timestamp/change-type attached from a broadcast-joined metadata
-    // frame. Only rewrite-style commits (update/delete/overwrite/restore/
-    // DV) still plan an individual diff subtree, so a window of N versions
-    // plans O(runs + rewrites) subtrees, not O(N). The remaining frames
-    // union in a balanced tree (log depth), not a left-deep chain.
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val run = scala.collection.mutable.ArrayBuffer.empty[RunFile]
-    var runEnd = -1L
-    def flushRun(): Unit = if (run.nonEmpty) {
-      frames += runFrame(spark, path, run.toSeq,
-        Snapshot.replay(store, path, runEnd))
-      run.clear()
-    }
-    (startVersion to end).foreach { v =>
-      val entries = store.read(path, v)
-      val info = entries.flatMap(_.commit).headOption
-      val commitType = info.map(_.commitType).getOrElse("append")
-      val ts = info.map(_.timestamp).getOrElse(0L)
-      val adds = graft.meta.DataFileInfo.stampedAdds(entries, v)
-      val removes = entries.flatMap(_.remove)
-      val appendLike =
-        Set("create", "clone", "append", "streaming", "delta")
-          .contains(commitType) &&
-        removes.isEmpty && !graft.meta.Tombstones.anyHas(adds) &&
-        !(resolveUpserts && commitType == "delta")
-      if (appendLike) {
-        val tpe = if (commitType == "delta") "upsert" else "insert"
-        adds.foreach(f => run += RunFile(f, v, ts, tpe))
-        runEnd = v
-      } else if (REWRITE_TYPES.contains(commitType)) {
-        // conservative run break: an `alter` inside the window may change
-        // column types, and the run frame reads with ONE schema
-        flushRun()
-      } else {
-        flushRun()
-        changesAt(spark, path, v, entries, resolveUpserts)
-          .foreach(frames += _)
-      }
-    }
-    flushRun()
-    if (frames.isEmpty) emptyFrame(spark, path, end)
-    else balancedUnion(frames.toSeq)
+    val (scanned, rowDiffs) = GraftCdfWindowScan.read(spark, path,
+      Snapshot.replay(store, path, end), startVersion, resolveUpserts)
+    wholeRowDiff(spark, path, rowDiffs, scanned.schema)
+      .fold(scanned)(scanned.union)
   }
 
-  /** One file of an append-run, with the commit facts its rows carry. */
-  private case class RunFile(f: DataFileInfo, v: Long, ts: Long, tpe: String)
-
-  /** Log-depth union: a left-deep fold over thousands of frames makes the
-    * analyzer recurse a list-shaped tree. */
-  private def balancedUnion(fs: Seq[DataFrame]): DataFrame =
-    if (fs.size == 1) fs.head
-    else balancedUnion(fs.grouped(2).map(g =>
-      g.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq)
-
-  /** ONE scan over every file of an append-run. Rows are tagged with their
-    * own commit's version/timestamp/type by joining `_metadata.file_path`
-    * (keyed on the unique part-file name) against a broadcast per-file
-    * metadata frame, which also carries each file's range-partition values
-    * (they live in the manifest, not the file). Files from before a
-    * mid-run schema ADD simply null-fill the newer columns — exactly what
-    * the per-version frames' unionByName(allowMissingColumns) produced. */
-  private def runFrame(
-      spark: SparkSession, path: String,
-      files: Seq[RunFile], endSnap: Snapshot): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val ti = endSnap.tableInfo
-    val dataSchema = graft.sources.GraftPkScan.asNullable(ti.dataSchema)
-    val partFields = ti.rangePartitionSchema.fields.toSeq
-    val metaSchema = StructType(
-      StructField("__cf_name", StringType) ::
-      StructField("__cf_ver", LongType) ::
-      StructField("__cf_ts", LongType) ::
-      StructField("__cf_tpe", StringType) ::
-      partFields.map(f => StructField(s"__cf_p_${f.name}", StringType)).toList)
-    val metaRows: java.util.List[Row] = scala.jdk.CollectionConverters
-      .SeqHasAsJava(files.map { rf =>
-        // the null-partition sentinel must become a real null BEFORE the
-        // typed cast below — the per-version path this run replaces mapped
-        // it via GraftFileIndex.castPartitionValue, and an ANSI cast of
-        // the literal sentinel to int/date would throw instead
-        Row.fromSeq(rf.f.path.split("/").last +: rf.v +: rf.ts +: rf.tpe +:
-          partFields.map(f =>
-            rf.f.partitionValues.getOrElse(f.name, null) match {
-              case graft.write.TransactionalWrite.HIVE_NULL => null
-              case v => v
-            }))
-      }).asJava
-    val meta = spark.createDataFrame(metaRows, metaSchema)
-    val raw = spark.read.schema(dataSchema)
-      .parquet(files.map(rf => rf.f.resolvedPath(path)): _*)
-      .withColumn("__cf_name",
-        substring_index(col("_metadata.file_path"), "/", -1))
-    raw.join(broadcast(meta), "__cf_name")
-      .select(dataSchema.fields.toSeq.map(f => col(bq(f.name))) ++
-        partFields.map(f =>
-          col(bq(s"__cf_p_${f.name}")).cast(f.dataType).as(f.name)) ++
-        Seq(col("__cf_tpe").as(CHANGE_TYPE),
-          col("__cf_ver").as(COMMIT_VERSION),
-          timestamp_millis(col("__cf_ts")).as(COMMIT_TIMESTAMP)): _*)
-  }
-
-  /** Typed empty frame: latest window schema + the three change columns. */
-  private def emptyFrame(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val snap = Snapshot.replay(SnapshotManagement.store, path, version)
-    val base = GraftRead.readFiles(spark, path, snap, Nil)
-    tag(base.limit(0), "insert", version, 0L)
-  }
-
-  private def tag(df: DataFrame, tpe: String, v: Long, tsMillis: Long): DataFrame =
-    df.withColumn(CHANGE_TYPE, lit(tpe))
-      .withColumn(COMMIT_VERSION, lit(v))
-      .withColumn(COMMIT_TIMESTAMP, timestamp_millis(lit(tsMillis)))
-
-  /** `entries` are the version's pre-read log entries — the window loop
-    * already holds them, so a rewrite-heavy window pays ONE metadata read
-    * per version, not two. */
-  private def changesAt(
-      spark: SparkSession, path: String, v: Long,
-      entries: Seq[graft.meta.LogEntry],
-      resolveUpserts: Boolean = false): Option[DataFrame] = {
+  /** Whole-row multiset diff of every commit's pre files (read at v-1)
+    * against its post files (read at v): a rewrite that carried a row over
+    * unchanged cancels out. Group-by-struct equality is null-safe and
+    * NaN/-0.0-normalizing, like `exceptAll`'s own aggregate rewrite. None
+    * when no commit has rows on either side. */
+  private def wholeRowDiff(
+      spark: SparkSession, path: String, diffs: Seq[CdfRowDiff],
+      schema: StructType): Option[DataFrame] = {
     val store = SnapshotManagement.store
-    val info = entries.flatMap(_.commit).headOption
-    val commitType = info.map(_.commitType).getOrElse("append")
-    val ts = info.map(_.timestamp).getOrElse(0L)
-    if (REWRITE_TYPES.contains(commitType)) return None
-
-    val adds = graft.meta.DataFileInfo.stampedAdds(entries, v)
-    val removePaths = entries.flatMap(_.remove).map(_.path).toSet
-    if (adds.isEmpty && removePaths.isEmpty) return None
-
-    val snap = Snapshot.replay(store, path, v)
-    def post: DataFrame = GraftRead.readFiles(spark, path, snap, adds)
-    // pre-state: the removed files' DataFileInfo lives in the PREVIOUS
-    // snapshot (remove entries carry only paths), read with that snapshot's
-    // schema so pre-evolution rows keep their own shape
-    lazy val prevSnap = Snapshot.replay(store, path, v - 1)
-    def pre: DataFrame = GraftRead.readFiles(spark, path, prevSnap,
-      prevSnap.files.filter(f => removePaths(f.path)))
-
-    commitType match {
-      case "create" | "clone" if adds.isEmpty => None
-      // a clone's initial commit is adds-only by construction: the cloned
-      // state surfaces as the feed's first inserts, like any fresh write
-      case "create" | "clone" | "append" | "streaming" =>
-        Some(tag(post, "insert", v, ts))
-      case "delta" | "delete" | "upsert" if graft.meta.Tombstones.anyHas(adds) =>
-        // tombstone-bearing commit (PK tombstone DELETE / MERGE with a
-        // DELETE clause): adds-only marker files that the merged post-read
-        // resolves to ZERO rows — a file-level pre/post diff of just the
-        // commit's own files would silently drop every deletion. Diff the
-        // touched buckets' merged state at v-1 vs v instead (mirrors the
-        // streaming side's diffPartitions): cost ∝ touched buckets' data,
-        // and the k-way reader applies marker-reset semantics on both sides.
-        Some(touchedBucketDiff(spark, path, prevSnap, snap, adds,
-          removePaths, v, ts, commitType))
-      case "delta" if resolveUpserts =>
-        // raw-image upsert, but the caller asked for true pre/post images:
-        // the merged-bucket diff resolves each written row against the
-        // bucket's v-1 state — an overwritten key becomes an update pair,
-        // a fresh key an insert, an identical re-write is suppressed
-        Some(touchedBucketDiff(spark, path, prevSnap, snap, adds,
-          removePaths, v, ts, commitType))
-      case "delta" =>
-        Some(tag(post, "upsert", v, ts))
-      case "update" | "delete" | "upsert"
-          if adds.exists(f => prevSnap.files.exists(p =>
-            p.path == f.path && p.dvPath != f.dvPath)) =>
-        // deletion-vector commit: some adds re-reference LIVE paths with a
-        // new vector. The re-added file's visible rows are NOT new — the
-        // change is exactly the rows the new vector masks beyond the old
-        // one (dvNew \ dvOld per file), emitted as deletions (or update
-        // pre-images for an update's masked-out halves). Fresh files and
-        // removed files still diff as usual.
-        val prevByPath = prevSnap.files.map(f => f.path -> f).toMap
-        val (dvReAdds, freshAdds) = adds.partition(f =>
-          prevByPath.contains(f.path))
-        val label = if (commitType == "delete") "delete" else "update_preimage"
-        val dvFrames = dvReAdds.flatMap { f =>
-          dvNewlyDeleted(spark, path, prevSnap, prevByPath(f.path), f)
-            .map(tag(_, label, v, ts))
-        }
-        val rest =
-          if (freshAdds.isEmpty && removePaths.isEmpty) None
-          else Some(diff(spark, pre,
-            GraftRead.readFiles(spark, path, snap, freshAdds),
-            snap, v, ts, commitType))
-        (dvFrames ++ rest.toSeq)
-          .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      case "overwrite" =>
-        // a replacement is a statement about every changed file: removed
-        // rows delete, added rows insert
-        val del = if (removePaths.isEmpty) None else Some(tag(pre, "delete", v, ts))
-        val ins = if (adds.isEmpty) None else Some(tag(post, "insert", v, ts))
-        (del.toSeq ++ ins.toSeq)
-          .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      case "restore" =>
-        // file-level diff would lie here: a restore that drops only a
-        // delta file leaves its KEY live at the older base value, so
-        // emitting the delta rows as 'delete' diverges the feed from the
-        // table. Diff the FULL merged snapshots instead — a restore is a
-        // whole-table statement and its feed cost is O(table), honestly.
-        val fullPre = GraftRead.readFiles(spark, path, prevSnap, prevSnap.files)
-        val fullPost = GraftRead.readFiles(spark, path, snap, snap.files)
-        Some(diff(spark, fullPre, fullPost, snap, v, ts, commitType))
-      case _ => // update | delete | upsert (merge mode): diff pre vs post
-        Some(diff(spark, pre, post, snap, v, ts, commitType))
-    }
-  }
-
-  /** Merged pre/post diff restricted to the (range, bucket) groups a
-    * tombstone-bearing commit touched. Both sides go through the full
-    * merge-on-read path, so marker rows resolve correctly (a key deleted by
-    * the commit merges to a row at v-1 and to nothing at v → `delete`; a
-    * key the same commit also re-upserted diffs to an update pair). */
-  private def touchedBucketDiff(
-      spark: SparkSession, path: String,
-      prevSnap: Snapshot, snap: Snapshot,
-      adds: Seq[DataFileInfo], removePaths: Set[String],
-      v: Long, ts: Long, commitType: String): DataFrame = {
-    val removed = prevSnap.files.filter(f => removePaths(f.path))
-    val touched = (adds ++ removed).map(f => (f.rangeKey, f.bucket)).toSet
-    def filesOf(s: Snapshot) =
-      s.files.filter(f => touched((f.rangeKey, f.bucket)))
-    val fullPre = GraftRead.readFiles(spark, path, prevSnap, filesOf(prevSnap))
-    val fullPost = GraftRead.readFiles(spark, path, snap, filesOf(snap))
-    diff(spark, fullPre, fullPost, snap, v, ts, commitType)
-  }
-
-  /** The rows of `preFile` whose indices the new vector masks BEYOND the
-    * old one — the exact row-level deletions a DV commit performed. Read
-    * straight from the parquet file via `_metadata.row_index` (the file is
-    * immutable; its row indices are the coordinate system both vectors
-    * speak), with range-partition values attached as literals. None when
-    * the vector did not grow. */
-  private def dvNewlyDeleted(
-      spark: SparkSession, path: String, prevSnap: Snapshot,
-      preFile: DataFileInfo, postFile: DataFileInfo): Option[DataFrame] = {
-    import org.roaringbitmap.longlong.Roaring64Bitmap
-    if (!postFile.hasDv) return None // vector dropped, not grown: no deletes
-    val conf = graft.write.GraftFs.conf(spark)
-    val dvNew = graft.sources.DeletionVectors.read(path, conf, postFile.dvPath)
-    val delta =
-      if (!preFile.hasDv) dvNew
-      else Roaring64Bitmap.andNot(dvNew,
-        graft.sources.DeletionVectors.read(path, conf, preFile.dvPath))
-    if (delta.isEmpty) return None
-    val holder = new DvBitmapHolder(
-      graft.sources.DeletionVectors.toBytes(delta))
-    val inDelta = udf((i: Long) => holder.contains(i))
-    val ti = prevSnap.tableInfo
-    val readSchema = graft.sources.GraftPkScan.asNullable(ti.dataSchema)
-    val raw = spark.read.schema(readSchema)
-      .parquet(preFile.resolvedPath(path))
-      .filter(inDelta(col("_metadata.row_index")))
-    val withRange = ti.rangePartitionSchema.fields.foldLeft(raw) { (d, sf) =>
-      val v = preFile.partitionValues.getOrElse(sf.name, null)
-      d.withColumn(sf.name,
-        (if (v == null) lit(null) else lit(v)).cast(sf.dataType))
-    }
-    Some(withRange.select(
-      (ti.dataSchema.fields ++ ti.rangePartitionSchema.fields)
-        .map(f => col(bq(f.name))): _*))
-  }
-
-  /** Row-level diff of one commit's rewrite. PK tables diff by key; non-PK
-    * by whole row. `post` side defines the output schema (it is at the
-    * commit's own version; `pre` may predate a schema evolution). */
-  private def diff(
-      spark: SparkSession, pre0: DataFrame, post: DataFrame,
-      snap: Snapshot, v: Long, ts: Long, commitType: String): DataFrame = {
-    val ti = snap.tableInfo
-    val outCols = post.columns.toSeq
-    // align pre to post's columns: evolution-added columns null-fill
-    val pre = pre0.select(outCols.map { c =>
-      if (pre0.columns.contains(c)) col(bq(c))
-      else lit(null).cast(post.schema(c).dataType).as(c)
-    }: _*)
-
-    if (ti.hasPrimaryKey) {
-      val keys = (ti.rangeColumns ++ ti.hashColumns).filter(outCols.contains)
-      val l = pre.alias("pre")
-      val r = post.alias("post")
-      val cond = keys.map(k => col(s"pre.${bq(k)}") <=> col(s"post.${bq(k)}"))
-        .reduce(_ && _)
-      val j = l.join(r, cond, "full_outer")
-      // PK and range-partition values are never null (upserts require
-      // them), so a null key marks side absence
-      val preAbsent = col("pre." + bq(keys.head)).isNull
-      val postAbsent = col("post." + bq(keys.head)).isNull
-      val nonKey = outCols.filterNot(keys.contains)
-      val changed: Column = nonKey
-        .map(c => !(col(s"pre.${bq(c)}") <=> col(s"post.${bq(c)}")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      // ONE pass over the join: each joined row explodes into its 0-2
-      // change images (insert | delete | update pre+post pair). The
-      // previous four filter-branches-unioned spelling instantiated the
-      // join subtree per branch, so the merged pre/post bucket reads —
-      // the diff's dominant cost — each executed FOUR times.
-      def img(prefix: String, tpe: String): Column =
-        struct(outCols.map(c => col(s"$prefix.${bq(c)}").as(c)) :+
-          lit(tpe).as(CHANGE_TYPE): _*)
-      val events = array(
-        when(preAbsent, img("post", "insert")),
-        when(postAbsent, img("pre", "delete")),
-        when(!preAbsent && !postAbsent && changed,
-          img("pre", "update_preimage")),
-        when(!preAbsent && !postAbsent && changed,
-          img("post", "update_postimage")))
-      j.select(explode(filter(events, e => e.isNotNull)).as("__cf_e"))
-        .select(col("__cf_e.*"))
-        .withColumn(COMMIT_VERSION, lit(v))
-        .withColumn(COMMIT_TIMESTAMP, timestamp_millis(lit(ts)))
-    } else {
-      // whole-row diff: a rewrite that carried a row over unchanged cancels
-      // out of both sides. A DELETE commit's vanished rows are deletions,
-      // not pre-images (a non-PK delete has no per-key identity to pair
-      // them with); update/upsert emit pre/post multiset deltas.
-      //
-      // ONE aggregation pass: both sides union into per-row (pre, post)
-      // counts and the multiset delta replicates via sequence-explode.
-      // The previous two-exceptAll spelling instantiated BOTH sides per
-      // exceptAll — the merged bucket reads (the diff's dominant cost)
-      // each executed twice — and each exceptAll rewrote into its own
-      // union + aggregate anyway. Group-by-struct equality is null-safe
-      // and NaN/-0.0-normalizing, exactly like exceptAll's own
-      // aggregate-based rewrite, so the emitted multiset is identical.
-      val (preLabel, postLabel) =
-        if (commitType == "delete" || commitType == "restore")
-          ("delete", "insert")
-        else ("update_preimage", "update_postimage")
-      val rowStruct = struct(outCols.map(c => col(bq(c)).as(c)): _*)
-      val both = pre.select(rowStruct.as("__r"),
-          lit(1L).as("__np"), lit(0L).as("__nq"))
-        .unionByName(post.select(rowStruct.as("__r"),
-          lit(0L).as("__np"), lit(1L).as("__nq")))
-      val delta = both.groupBy("__r")
-        .agg(sum(col("__np")).as("__cp"), sum(col("__nq")).as("__cq"))
-        .withColumn("__n", col("__cp") - col("__cq"))
-        .filter(col("__n") =!= 0L)
-      delta.select(col("__r"),
-          when(col("__n") > 0, lit(preLabel)).otherwise(lit(postLabel))
-            .as(CHANGE_TYPE),
-          explode(sequence(lit(1L), abs(col("__n")))).as("__cf_i"))
-        .select(col("__r.*"), col(CHANGE_TYPE))
-        .withColumn(COMMIT_VERSION, lit(v))
-        .withColumn(COMMIT_TIMESTAMP, timestamp_millis(lit(ts)))
-    }
+    val rowFields = schema.fields.toSeq.dropRight(3) // data + range columns
+    def side(d: CdfRowDiff, files: Seq[DataFileInfo], version: Long,
+        sign: Long): Option[DataFrame] =
+      if (files.isEmpty) None
+      else {
+        val df = GraftRead.readFiles(spark, path,
+          Snapshot.replay(store, path, version), files)
+        // align to the window's columns: evolution-added columns null-fill
+        val row = struct(rowFields.map { f =>
+          (if (df.columns.contains(f.name)) col(bq(f.name)) else lit(null))
+            .cast(f.dataType).as(f.name)
+        }: _*)
+        Some(df.select(row.as("__r"), lit(d.version).as("__v"),
+          lit(d.tsMillis).as("__ts"), lit(d.labels._1).as("__lp"),
+          lit(d.labels._2).as("__lq"), lit(sign).as("__s")))
+      }
+    val sides = diffs.flatMap(d =>
+      side(d, d.pre, d.version - 1, 1L) ++ side(d, d.post, d.version, -1L))
+    if (sides.isEmpty) return None
+    val counted = sides.reduce(_.union(_))
+      .groupBy("__v", "__ts", "__lp", "__lq", "__r")
+      .agg(sum(col("__s")).as("__n"))
+      .filter(col("__n") =!= 0L)
+      .select(col("__r.*"),
+        when(col("__n") > 0, col("__lp")).otherwise(col("__lq"))
+          .as(CHANGE_TYPE),
+        col("__v").as(COMMIT_VERSION),
+        timestamp_millis(col("__ts")).as(COMMIT_TIMESTAMP),
+        abs(col("__n")).as("__n"))
+    // |n| copies per distinct row, generated lazily: memory per row stays
+    // constant however many copies a rewrite touched
+    Some(counted.flatMap { r =>
+      val image = Row.fromSeq(r.toSeq.init)
+      (1L to r.getLong(r.length - 1)).iterator.map(_ => image)
+    }(Encoders.row(schema)))
   }
 }

@@ -63,7 +63,7 @@ class ChangeFeedDifferentialSuite extends GraftFunSuite {
     test(s"PK DML history, seed $seed: batch feed equals the stream") {
       withTempTable { dir =>
         val g = new RandomDmlSequence(spark, dir, seed, layoutOps = false)
-        val ops = (0 until 30).map(g.step)
+        val ops = (0 until 24).map(g.step)
         assertBatchEqualsStream(dir, s"seed=$seed ops=${ops.mkString(" ")}")
       }
     }

@@ -144,6 +144,21 @@ class ChangeFeedSuite extends GraftFunSuite {
     }
   }
 
+  test("non-PK rewrite of 100k copies of one row emits every copy") {
+    withTempTable { dir =>
+      // DVs off: the UPDATE rewrites the file, so the feed takes the
+      // whole-row count diff, whose copies must not be one array per row
+      spark.range(100000).select(lit(1L).as("k"), lit("a").as("s"))
+        .write.format("graft").option("graft.deletionVectors", "false")
+        .save(dir)
+      val t = GraftTable.forPath(spark, dir)
+      t.updateExpr("k = 1", Map("s" -> "'b'"))
+      val v = t.snapshot.version
+      assert(types(t.changes(v, v)) == Map(
+        "update_preimage" -> 100000L, "update_postimage" -> 100000L))
+    }
+  }
+
   test("schema evolution inside the window null-fills by name") {
     withTempTable { dir =>
       Seq((1, "a")).toDF("id", "name").write.format("graft")

@@ -490,6 +490,26 @@ class LlmOperatorsSuite extends GraftFunSuite {
     assert(!got.exists(p => p._1 == 99L || p._2 == 99L))
   }
 
+  test("embedding near-dup: a pair whose products are all null scores 0.0") {
+    // non-null at complementary positions: every per-dimension product
+    // has a null side
+    val a = Seq(Some(1.0), None, Some(2.0), None)
+    def b(sign: Double) = Seq(None, Some(3.0 * sign), None, Some(4.0 * sign))
+    def bucket(v: Seq[Option[Double]]): Int =
+      Ann.unitVecs(Seq((0L, v)).toDF("doc_id", "embedding"), "doc_id",
+        "embedding", "id", "u", numPlanes = 1, dims = 4)
+        .select("bucket").as[Int].head()
+    // a vector and its negation fall on opposite sides of the one plane:
+    // take the b that shares a's bucket, so the pair is scored at all
+    val bv = Seq(1.0, -1.0).map(b).find(v => bucket(v) == bucket(a)).get
+    val got = Dedup.embeddingNearDuplicates(
+        Seq((1L, a), (2L, bv)).toDF("doc_id", "embedding"), "doc_id",
+        "embedding", minCosine = 0.0, numPlanes = 1, dims = 4)
+      .select("a_id", "b_id", "cosine").as[(Long, Long, Double)]
+      .collect().toSeq
+    assert(got == Seq((1L, 2L, 0.0)), s"got $got")
+  }
+
   test("embedding near-dup MEGA-BUCKET cap: a direction-correlated corpus " +
       "that collapses into one raw-LSH bucket is residual-subdivided — " +
       "pair work bounded, emitted pairs exact") {

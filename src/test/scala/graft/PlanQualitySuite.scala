@@ -377,6 +377,17 @@ class PlanQualitySuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(scans <= 8,
         s"41-version window must plan O(runs) scans, found $scans:\n" +
         leaves.map(_.nodeName).mkString(", "))
+      // ... and few tasks: the append versions' files share size-packed
+      // partitions. The collapsed-run spelling read run 1's 30 files in 4
+      // file-scan partitions; the whole window may plan no more than that
+      val parts = org.apache.spark.sql.classic.ClassicConversions
+        .castToImpl(feed).queryExecution.sparkPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.inputPartitions.size
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.inputRDD.getNumPartitions
+        }.sum
+      assert(parts <= 4, s"41-version window planned $parts input partitions")
     }
   }
 
