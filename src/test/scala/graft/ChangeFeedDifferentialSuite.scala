@@ -63,9 +63,31 @@ class ChangeFeedDifferentialSuite extends GraftFunSuite {
     test(s"PK DML history, seed $seed: batch feed equals the stream") {
       withTempTable { dir =>
         val g = new RandomDmlSequence(spark, dir, seed, layoutOps = false)
-        val ops = (0 until 24).map(g.step)
+        val ops = (0 until 20).map(g.step)
         assertBatchEqualsStream(dir, s"seed=$seed ops=${ops.mkString(" ")}")
       }
+    }
+  }
+
+  test("PK restore across a rebucket: batch feed equals the stream, and " +
+      "moved keys pair as updates") {
+    import spark.implicits._
+    withTempTable { dir =>
+      (0L until 40L).map(i => (i, s"v$i")).toDF("id", "v").write
+        .format("graft").option("hashPartitions", "id")
+        .option("hashBucketNum", "2").save(dir) // v0
+      val t = GraftTable.forPath(spark, dir)
+      t.upsert((0L until 10L).map(i => (i, s"u$i")).toDF("id", "v")) // v1
+      t.rebucket(5) // v2
+      t.update(col("id") < 20L, Map("v" -> lit("x"))) // v3, 5 buckets
+      val restored = t.restore(1L) // back to v1's state and 2 buckets
+      assertBatchEqualsStream(dir, "restore across a rebucket")
+      val got = ChangeFeed.changes(spark, dir, restored, restored)
+        .select(col(ChangeFeed.CHANGE_TYPE), col("id")).as[(String, Long)]
+        .collect().toSeq
+      assert(got.sorted == (0L until 20L).flatMap(i =>
+        Seq(("update_postimage", i), ("update_preimage", i))).sorted,
+        s"got $got")
     }
   }
 
