@@ -274,6 +274,7 @@ class GraftCdfMicroBatchStream(
     * groups pair by range partition alone, each side merging its buckets
     * back into one key order. */
   private def diffPartitions(v: Long, c: VersionChanges): Seq[CdfUnit] = {
+    if (c.adds.isEmpty && c.removed.isEmpty) return Nil
     val prevSnap = Snapshot.replay(store, tablePath, v - 1)
     val snap = Snapshot.replay(store, tablePath, v)
     val relayout = prevSnap.tableInfo.bucketNum != snap.tableInfo.bucketNum
@@ -385,6 +386,9 @@ case class GraftCdfReaderFactory(
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(tag.changeType), tag.version, tag.tsMillis * 1000L))
 
+  private def rowsOf(r: PartitionReader[InternalRow]): Iterator[InternalRow] =
+    Iterator.continually(r).takeWhile(_.next()).map(_.get())
+
   private def tagged(rows: Iterator[InternalRow], tag: CdfTag): Iterator[InternalRow] = {
     val joined = new JoinedRow
     val t = changeRow(tag)
@@ -455,9 +459,8 @@ case class GraftCdfReaderFactory(
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case CdfTaggedPartition(ip, tag) =>
-        val r = inner.createReader(ip)
-        GraftStreamReaderFactory.readerOf(tagged(
-          Iterator.continually(r).takeWhile(_.next()).map(_.get()), tag))
+        GraftStreamReaderFactory.readerOf(
+          tagged(rowsOf(inner.createReader(ip)), tag))
       case CdfFilesPartition(bin, tags) =>
         GraftStreamReaderFactory.readerOf(bin.files.iterator.zip(tags)
           .flatMap { case (f, tag) => tagged(inner.fileRows(f), tag) })
@@ -493,10 +496,9 @@ case class GraftCdfReaderFactory(
     * each group PK-sorted: a k-way merge restores one key order. */
   private def sideRows(groups: Array[GraftFileGroup],
       keyOrd: Ordering[InternalRow]): Iterator[InternalRow] = {
-    val its = groups.toSeq.map { g =>
-      val r = inner.createReader(GraftPkInputPartition(0, Array(g)))
-      Iterator.continually(r).takeWhile(_.next()).map(_.get().copy()).buffered
-    }.filter(_.hasNext)
+    val its = groups.toSeq.map(g =>
+      rowsOf(inner.createReader(GraftPkInputPartition(0, Array(g))))
+        .map(_.copy()).buffered).filter(_.hasNext)
     if (its.size <= 1) its.headOption.getOrElse(Iterator.empty)
     else new Iterator[InternalRow] {
       private val heads = mutable.PriorityQueue(its: _*)(

@@ -513,13 +513,7 @@ case class GraftPkReaderFactory(
           merged.map(out)
         }
       }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (iter.hasNext) { current = iter.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    GraftStreamReaderFactory.readerOf(iter)
   }
 
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {

@@ -624,6 +624,7 @@ case class GraftStreamReaderFactory(
 }
 
 object GraftStreamReaderFactory {
+  /** A partition reader over `iter`, which holds nothing to close. */
   def readerOf(iter: Iterator[InternalRow]): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
