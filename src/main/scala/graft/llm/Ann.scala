@@ -233,12 +233,37 @@ object Ann {
     }
   }
 
-  /** Per-query top-k of `scored(qid, nid, sim)`; ties break by id. */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"))
+  /** Per-query top-k of `scored(qid, nid, sim)`; ties break by id.
+    *
+    * With `queries` — one `qid` row per query row — a qid given twice fails
+    * the query with an error naming it. Each query row adds a marker row
+    * that sorts FIRST in its qid's partition of this same window, so a
+    * second marker lands at rank 2: always inside the k + 1 rows per qid
+    * Spark keeps map-side before the shuffle, so the check costs neither a
+    * job nor that group limit. */
+  private[llm] def topK(
+      scored: DataFrame, k: Int, queries: Option[DataFrame] = None): DataFrame = {
+    val byScore = Seq(col("sim").desc, col("nid").asc)
+    queries match {
+      case None =>
+        val w = Window.partitionBy("qid").orderBy(byScore: _*)
+        scored.withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= k)
+          .select(col("qid"), col("rank"), col("nid"))
+      case Some(q) =>
+        val w = Window.partitionBy("qid")
+          .orderBy(col("__mark").desc +: byScore: _*)
+        scored.withColumn("__mark", lit(false))
+          .unionByName(q.select(col("qid"), lit(true).as("__mark")),
+            allowMissingColumns = true)
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= k + 1 &&
+            when(col("__mark") && col("rank") > 1, raise_error(concat(
+                lit("duplicate query id "), col("qid").cast("string"),
+                lit(": query ids must be unique per call"))))
+              .otherwise(!col("__mark")))
+          .select(col("qid"), (col("rank") - 1).as("rank"), col("nid"))
+    }
   }
 
   /** Exact cosine top-k for each query vector. Output:

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent IVF index for exact cosine top-k — the ANN twin of
@@ -21,15 +20,15 @@ import org.apache.spark.sql.functions._
   *    scan, so at 100 TB a query batch reads only the few cells whose
   *    angular bound can still matter, straight off the manifest.
   *
-  * Queries stay EXACT (same angular-bound pruning as [[Ann.ivfTopK]]):
-  * pass 1 scores each query's nearest cell exhaustively for a provisional
-  * kth-best threshold; pass 2 probes only cells whose bound beats it.
-  * Skipped cells provably hold no top-k member. The probed-cell id sets
-  * are collected to literals (bounded by nCentroids — metadata-scale by
-  * construction) so partition pruning happens at scan PLANNING, not as a
-  * runtime join.
+  * Queries stay EXACT with one scan of the corpus: [[probedCells]] gives
+  * each query a kth-best threshold from cell METADATA alone (angular
+  * radius and member count per cell) and keeps only the cells whose
+  * angular upper bound still reaches it — skipped cells provably hold no
+  * top-k member. The probed-cell ids are collected to literals (bounded by
+  * nCentroids — metadata-scale by construction) so partition pruning
+  * happens at scan PLANNING, not as a runtime join.
   */
-object AnnIndex {
+object AnnIndex extends org.apache.spark.internal.Logging {
 
   private def centroidsPath(p: String) = s"$p/centroids"
   private def statsPath(p: String) = s"$p/cellstats"
@@ -287,7 +286,7 @@ object AnnIndex {
           .agg(count(lit(1)).as("loss"))
         // FULL outer: a cell empty at build time (no stored radius) that
         // receives its first member now must enter the stats — an inner or
-        // left fold would hide it from the probe's radii join and silently
+        // left fold would hide it from the probe's stats and silently
         // break exactness
         val folded = stored.join(grown, Seq("cid"), "full_outer")
           .join(losses, Seq("cid"), "left_outer")
@@ -535,7 +534,7 @@ object AnnIndex {
         val t = new Thread(() => {
           try rebuildIfDue(spark, indexPath, corpusPath, idCol, vecCol,
             nCentroids, hashBucketNum)
-          catch { case e: Throwable => System.err.println(
+          catch { case e: Throwable => logWarning(
             s"[graft-ann] background rebuild of $indexPath failed: " +
             e.getMessage) }
         }, s"graft-ann-rebuild-$indexPath")
@@ -585,54 +584,141 @@ object AnnIndex {
       .write.format("graft").mode("overwrite").save(statsPath(indexPath))
   }
 
-  /** Centroids + cell radii are metadata-scale BY CONSTRUCTION (nCentroids
-    * rows), yet as graft tables each read pays snapshot + scan planning —
-    * and [[topK]]'s probe logic derives from them in several separate
-    * actions. Collect them ONCE per (index, versions) into driver rows and
-    * replay as LocalRelations: planning becomes trivial, repeats are free,
-    * and a [[build]]/[[syncFromTable]] bump of either table's version
-    * invalidates the entry. One entry per index path, so the cache can't
-    * grow past the set of indexes a session actually queries. */
-  private case class CellMeta(
-      centsRows: java.util.List[org.apache.spark.sql.Row],
-      centsSchema: org.apache.spark.sql.types.StructType,
-      radiiRows: java.util.List[org.apache.spark.sql.Row],
-      radiiSchema: org.apache.spark.sql.types.StructType)
+  /** One cell's inputs to the probe bound: its centroid's unit components
+    * (`dims` ascending, `cx` aligned with them) and its stats — the angular
+    * radius as (cos r, sin r) and the live member count `cnt`. */
+  private[llm] final case class CellBound(
+      cid: Any, dims: Array[Int], cx: Array[Double],
+      cosr: Double, sinr: Double, cnt: Long)
 
-  // keyed by the INDEX path (not the generation root — one entry per
-  // index, so rebuild swaps replace their index's entry instead of
-  // accumulating one dead entry per superseded generation); the value
+  /** Every indexed cell's [[CellBound]], plus the cid column's type. */
+  private final case class CellBounds(
+      cells: Array[CellBound], cidType: org.apache.spark.sql.types.DataType) {
+    /** Vector length the centroids cover. */
+    def dims: Int =
+      cells.foldLeft(0)((m, c) => math.max(m, c.dims.lastOption.fold(0)(_ + 1)))
+  }
+
+  // Centroids and stats are metadata-scale BY CONSTRUCTION (nCentroids
+  // rows each), yet as graft tables each read pays snapshot + scan
+  // planning. Compiled ONCE per (index, versions): keyed by the INDEX path
+  // (one entry per index, so rebuild swaps replace their index's entry
+  // instead of accumulating one per superseded generation); the value
   // carries the generation root it was read from, so a swap invalidates
-  // even if the new generation's table versions coincide with the old
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long, Long, CellMeta)]()
+  // even if the new generation's table versions coincide with the old.
+  private val boundsCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, Long, Long, CellBounds)]()
 
-  private def cellMeta(
-      spark: SparkSession, normIdx: String,
-      root: String): (DataFrame, DataFrame) = {
+  private def cellBounds(
+      spark: SparkSession, normIdx: String, root: String): CellBounds = {
     import graft.meta.SnapshotManagement
     val cv = SnapshotManagement
       .snapshot(SnapshotManagement.normalize(centroidsPath(root))).version
     val rv = SnapshotManagement
       .snapshot(SnapshotManagement.normalize(statsPath(root))).version
-    val cached = metaCache.get(normIdx) match {
-      case (croot, ccv, crv, m)
-          if croot == root && ccv == cv && crv == rv => m
+    boundsCache.get(normIdx) match {
+      case (croot, ccv, crv, b) if croot == root && ccv == cv && crv == rv => b
       case _ =>
-        val c = spark.read.format("graft").load(centroidsPath(root))
-        val r = spark.read.format("graft").load(statsPath(root))
-        val m = CellMeta(c.collectAsList(), c.schema, r.collectAsList(), r.schema)
-        metaCache.put(normIdx, (root, cv, rv, m))
-        m
+        val cents = spark.read.format("graft").load(centroidsPath(root))
+        val stats = spark.read.format("graft").load(statsPath(root))
+        // a cell without a stats row (or pre-cnt stats) gets the widest
+        // radius and claims no members: it is always probed and never
+        // tightens the threshold — conservative costs a scan, the
+        // alternative costs exactness
+        val statsBy = stats.collect().map { r =>
+          def num(f: String): Option[Number] =
+            if (!stats.columns.contains(f) || r.isNullAt(r.fieldIndex(f))) None
+            else Some(r.getAs[Number](f))
+          r.getAs[Any]("cid") -> ((num("cosr").fold(-1.0)(_.doubleValue),
+            num("sinr").fold(0.0)(_.doubleValue), num("cnt").fold(0L)(_.longValue)))
+        }.toMap
+        val cells = cents.collect()
+          .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+          .groupBy(_.get(0)).iterator.map { case (cid, rs) =>
+            val comps = rs.map(r => (r.getInt(1), r.getDouble(2))).sortBy(_._1)
+            val (cosr, sinr, cnt) = statsBy.getOrElse(cid, (-1.0, 0.0, 0L))
+            CellBound(cid, comps.map(_._1), comps.map(_._2), cosr, sinr, cnt)
+          }.toArray
+        val b = CellBounds(cells, cents.schema("cid").dataType)
+        boundsCache.put(normIdx, (root, cv, rv, b))
+        b
     }
-    (spark.createDataFrame(cached.centsRows, cached.centsSchema),
-      spark.createDataFrame(cached.radiiRows, cached.radiiSchema))
+  }
+
+  /** The cells query vector `qv` must scan for an exact top-`k`; empty for
+    * a null or zero-norm query (cosine undefined — it returns no rows, as
+    * everywhere in the ANN family).
+    *
+    * With a = angle(q, centroid) and r = the cell's radius, every member's
+    * cosine to q lies in [cos(a+r), cos(a-r)], expanded by the angle-sum
+    * identities on the stored (cos r, sin r) — no acos anywhere. Clamps: a+r
+    * past pi floors the interval at -1, a-r below 0 caps it at 1. Walking
+    * the cells in lower-bound-descending order until their member counts
+    * reach k proves "at least k members score >= t0"; a cell whose upper
+    * bound misses t0 then provably holds no top-k member. Fewer than k
+    * counted members gives t0 = -2: probe everything. cnt is maintained
+    * conservatively low by sync, which only ever weakens t0. The margin on
+    * ub absorbs double rounding, so the bound can only probe an extra cell,
+    * never skip a required one. */
+  private[llm] def probedCells(
+      cells: Array[CellBound], qv: scala.collection.Seq[Any], k: Int): Seq[Any] = {
+    if (qv == null) return Nil
+    // (cid, ub, lb, cnt) per cell; the norm runs over the centroid's dims
+    val bounds = cells.flatMap { c =>
+      var dot = 0.0
+      var norm2 = 0.0
+      var i = 0
+      while (i < c.dims.length) {
+        val d = c.dims(i)
+        if (d >= 0 && d < qv.length && qv(d) != null) {
+          val x = qv(d).asInstanceOf[Double]
+          dot += x * c.cx(i)
+          norm2 += x * x
+        }
+        i += 1
+      }
+      if (norm2 <= 0.0) None
+      else {
+        val qcs = math.max(-1.0, math.min(1.0, dot / math.sqrt(norm2)))
+        val sinA = math.sqrt(math.max(0.0, 1.0 - qcs * qcs))
+        val ub = if (qcs >= c.cosr) 1.0 else qcs * c.cosr + sinA * c.sinr
+        val lb = if (qcs < -c.cosr) -1.0 else qcs * c.cosr - sinA * c.sinr
+        Some((c.cid, ub, lb, c.cnt))
+      }
+    }
+    // lb ties share a value, so tie order cannot change t0
+    var cum = 0L
+    var t0 = -2.0
+    bounds.sortBy(-_._3).foreach { case (_, _, lb, cnt) =>
+      cum += cnt
+      if (t0 == -2.0 && cum >= k) t0 = lb
+    }
+    bounds.toSeq.collect { case (cid, ub, _, _) if ub + 1e-9 >= t0 => cid }
   }
 
   /** Exact cosine top-k of `queries` against the indexed corpus. Output
     * (qid, rank, nid) — identical to [[Ann.bruteTopK]] over the corpus the
-    * index was built from (zero-norm corpus vectors were dropped at build,
-    * zero-norm queries return no rows, as everywhere in the ANN family). */
+    * index was built from (zero-norm corpus vectors were dropped at build;
+    * null and zero-norm queries return no rows, as everywhere in the ANN
+    * family). Query ids must be unique per call: a qid given twice fails
+    * the query with an error naming it.
+    *
+    * One plan at every batch size:
+    *  1. each query row gets its probed cells from [[probedCells]], run on
+    *     the executors over a broadcast of the cached [[CellBound]]s — the
+    *     threshold comes from metadata alone, so the corpus is touched once
+    *     and planning collects no query vector to the driver;
+    *  2. the (qid, qv, probe) frame is stabilized lazily, so the one
+    *     planning action — pair counts per probed cid, at most nCentroids
+    *     rows — also runs the caller's query subtree, exactly once. Its cids
+    *     become `isin` literals that partition-prune the cells scan at
+    *     PLANNING; its pair count decides whether the (qid, qv, cid) side
+    *     fits `spark.sql.autoBroadcastJoinThreshold`;
+    *  3. the probed cells join their queries on cid and score per document
+    *     with [[Ann.pairDot]] on the raw query vector: |q|·cos ranks as the
+    *     cosine does, with the same ties;
+    *  4. [[Ann.topK]]'s window ranks, and checks in the same partitions that
+    *     each qid came from one query row. */
   def topK(
       spark: SparkSession, indexPath: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
@@ -641,274 +727,37 @@ object AnnIndex {
     // leaves this call on one coherent generation (kept on disk through
     // the next rebuild)
     val root = tableRoot(indexPath)
-    val (cents, radii) = cellMeta(spark,
+    val meta = cellBounds(spark,
       graft.meta.SnapshotManagement.normalize(indexPath), root)
-    // SINGLE-SCAN probe plan: the kth-best threshold comes from METADATA
-    // alone, so the corpus is touched exactly once. Each cell's stats give
-    // every member a sim interval around the query: with a = angle(q,
-    // centroid) and r = cell radius, every member sim ∈ [cos(a+r),
-    // cos(a-r)]. Sorting a query's cells by that LOWER bound and walking
-    // until member counts accumulate to k proves "at least k corpus
-    // vectors score >= t0" — so any cell whose UPPER bound misses t0
-    // provably holds no top-k member and is skipped. t0 is weaker than the
-    // old scan-the-nearest-cell threshold, but it is FREE: the old design
-    // paid a second corpus-touching phase (scan nearest cells, rank, then
-    // probe the rest) whose fixed job cost dominated small query batches,
-    // and on weak-bound corpora it degenerated to scanning everything
-    // TWICE. cnt is maintained conservatively low by sync (see the fold),
-    // which only ever weakens t0 — exactness never depends on it.
-    //
-    // The ONLY stabilized intermediate is `qu` (upstream cost unknown —
-    // the caller's frame). qCell/bounds/probe are per-query metadata
-    // derived from `qu` and the LOCAL centroid/stats relations; deriving
-    // them twice (once for the cid collect, once inside the final job)
-    // costs microseconds, while a localCheckpoint each would cost a full
-    // scheduled job.
-    // RAW query components, not unit rows: cosine RANKS per query are
-    // invariant under the positive per-query scale 1/|q|, so the final
-    // scoring join never needs normalized values — only the angular
-    // bounds below do, and there cos(q, c) comes from ONE fused aggregate
-    // (sum(x·cx) and sum(x²) in the same groupBy — the cid-dim join is
-    // dense, so the per-group x² sum IS the query norm). That drops the
-    // norm-then-rescale shuffle+join of Ann.unitRows from the plan. Lazy
-    // checkpoint: the probe-pair collect below is the first action — it
-    // fills qx's blocks and computes the probe plan in ONE scheduled job.
-    // SMALL-BATCH DRIVER PROBE (the common point-lookup / small-batch
-    // case): centroids and stats are already LOCAL relations, so for a
-    // bounded query batch the whole qCell→bounds→t0→probe derivation is
-    // a few thousand double ops — running it distributively costs 4-6
-    // AQE stage jobs (qx materialization, qCell aggregate, the t0 window
-    // + aggregate, the t0 broadcast) of ~70 ms each, ALL of it to decide
-    // metadata. One bounded collect of the query vectors replaces every
-    // one of those jobs; the math below mirrors the SQL expressions
-    // term-for-term (same ascending-dim accumulation the per-group hash
-    // aggregate produced, same clamps, same 1e-9 margin — and the bound
-    // logic is conservative, so a last-ulp divergence can only cost one
-    // extra probed cell, never exactness). Batches over the cap take the
-    // distributed path below, unchanged.
-    val maxLocalQueries = 8192
-    val qCollected = queries
+    val bc = spark.sparkContext.broadcast(meta.cells)
+    val probe = udf(new org.apache.spark.sql.api.java.UDF1[
+        scala.collection.Seq[Any], Seq[Any]] {
+      def call(qv: scala.collection.Seq[Any]): Seq[Any] =
+        probedCells(bc.value, qv, k)
+    }, org.apache.spark.sql.types.ArrayType(meta.cidType))
+    val q = queries
       .select(col(s"`$queryIdCol`").as("qid"),
         col(s"`$queryVecCol`").cast("array<double>").as("qv"))
-      .limit(maxLocalQueries + 1).collect()
-    if (qCollected.length <= maxLocalQueries)
-      return topKLocalProbe(spark, root, qCollected,
-        queries.schema(queryIdCol).dataType, cents, radii, k)
-    val qx = Checkpoints.stabilize(
-      queries.select(col(s"`$queryIdCol`").as("qid"),
-        posexplode(col(s"`$queryVecCol`").cast("array<double>"))
-          .as(Seq("dim", "x"))),
-      eager = false)
-    // zero-norm queries drop here (cosine undefined), exactly as
-    // Ann.unitRows does for every ANN variant
-    val qCell = qx.join(broadcast(cents), "dim")
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("x") * col("cx")).as("dotr"), sum(col("x") * col("x"))
-        .as("norm2"))
-      .filter(col("norm2") > 0.0d)
-      .select(col("qid"), col("cid"),
-        (col("dotr") / sqrt(col("norm2"))).as("qcs"))
-
-    val clamp: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => greatest(lit(-1.0d), least(lit(1.0d), c))
-    val qcsC = clamp(col("qcs"))
-    val sinA = sqrt(greatest(lit(0.0d), lit(1.0d) - qcsC * qcsC))
-    val cosr = coalesce(col("cosr"), lit(-1.0d))
-    val sinr = coalesce(col("sinr"), lit(0.0d))
-    // left join + widest-radius default: a cell somehow missing its stats
-    // row must be PROBED (ub 1) and must claim nothing for the threshold
-    // (lb -1, cnt 0) — conservative costs a scan, the alternative costs
-    // exactness. cos(a±r) expands via the angle-sum identities on the
-    // stored (cos r, sin r) — no acos anywhere. Clamps: a+r past pi means
-    // the interval floor is -1; a-r below 0 means the ceiling is 1.
-    val cntCol =
-      if (radii.columns.contains("cnt")) coalesce(col("cnt"), lit(0L))
-      else lit(0L) // pre-cnt stats: threshold degrades to probe-everything
-    val bounds = qCell.join(broadcast(radii), Seq("cid"), "left_outer")
-      .select(col("qid"), col("cid"),
-        when(qcsC >= cosr, lit(1.0d))
-          .otherwise(qcsC * cosr + sinA * sinr).as("ub"),
-        when(qcsC < -cosr, lit(-1.0d))
-          .otherwise(qcsC * cosr - sinA * sinr).as("lb"),
-        cntCol.as("cnt"))
-    val wlb = Window.partitionBy("qid")
-      .orderBy(col("lb").desc, col("cid").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // t0 = lb of the first cell (in lb-desc order) at which cumulative
-    // membership reaches k; fewer than k counted members => -2 (probe all)
-    val t0 = bounds.withColumn("cum", sum(col("cnt")).over(wlb))
-      .groupBy("qid")
-      .agg(coalesce(max(when(col("cum") >= k, col("lb"))), lit(-2.0d))
-        .as("t0"))
-    val probe = bounds.join(broadcast(t0), "qid")
-      .filter(col("ub") + lit(1e-9) >= col("t0"))
-      .select("qid", "cid")
-    // one planning action collects the (qid, cid) probe pairs themselves
-    // when they fit (they're bounded by |queries| × probed cells — tiny
-    // for the common point-lookup / small-batch case), so the final job
-    // joins a LOCAL relation instead of re-deriving the probe plan
-    // distributively. The limit(cap + 1) probe is the overflow detector:
-    // a truncated collect is discarded and only the distinct cids are
-    // collected (bounded by nCentroids — metadata-scale by construction),
-    // with the pair set re-derived inside the final job.
-    val maxLocalPairs = 100000
-    val pairRows = probe.limit(maxLocalPairs + 1).collect()
-    val (probeCids, probePairs, pairsLocal) =
-      if (pairRows.length <= maxLocalPairs) {
-        (pairRows.map(_.get(1)).distinct.toSeq,
-          spark.createDataFrame(
-            java.util.Arrays.asList(pairRows: _*), probe.schema), true)
-      } else {
-        (probe.select("cid").distinct().collect().map(_.get(0)).toSeq, probe,
-          false)
-      }
-    if (probeCids.isEmpty) {
-      // no query survived unit-normalization — empty, correctly-shaped out
-      return qCell.select(col("qid"), lit(0).as("rank"),
-        col("cid").as("nid")).limit(0)
-    }
-    // ONE partition-pruned pass over the probed cells: the isin literals
-    // push into the range-partition filter at scan PLANNING, each cell row
-    // fans out only to the queries probing that cell, and the rank window
-    // finishes the job
-    // broadcast hints ONLY when the probe plan collected locally: in the
-    // overflow branch (>100k pairs — so the query batch itself is large)
-    // forcing a broadcast of the full distributed pair frame could blow the
-    // broadcast limit at exactly the scale the fallback exists for; there a
-    // plain join lets AQE pick the strategy from real sizes.
-    val cellRows = spark.read.format("graft").load(cellsPath(root))
-      .filter(col("cid").isin(probeCids: _*))
-      .select(col("cid"), col("nid"),
-        posexplode(col("uvec")).as(Seq("dim", "nx")))
-    val scored = (if (pairsLocal) {
-      cellRows.join(broadcast(probePairs), Seq("cid"))
-        .join(broadcast(qx), Seq("qid", "dim"))
-    } else {
-      cellRows.join(probePairs, Seq("cid")).join(qx, Seq("qid", "dim"))
-    })
-      // raw-x sim = |q| × cosine: same per-query order, same ties
-      .groupBy("qid", "nid").agg(sum(col("nx") * col("x")).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"))
-  }
-
-  /** [[topK]]'s small-batch path: the probe PLAN (which cells each query
-    * scans, and the metadata threshold t0 deciding it) computed entirely
-    * on the DRIVER from the already-local centroid/stats relations — zero
-    * scheduled jobs before the single corpus-touching scan, where the
-    * distributed derivation paid 4-6 AQE stage jobs of pure metadata
-    * work. Mirrors the SQL expressions term-for-term (ascending-dim
-    * accumulation, same clamps, same 1e-9 margin); the cell bound is
-    * conservative, so a last-ulp divergence can only probe one extra
-    * cell, never skip a required one. Driver memory is bounded by the
-    * caller's 8k-query cap × dims plus nCentroids metadata rows. */
-  private def topKLocalProbe(
-      spark: SparkSession, root: String,
-      qRows: Array[org.apache.spark.sql.Row],
-      qidType: org.apache.spark.sql.types.DataType,
-      cents: DataFrame, radii: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
-    val cidType = cents.schema("cid").dataType
-    // cents/radii are LOCAL relations — collect() is a LocalTableScan,
-    // not a job
-    val centComp: Map[Any, Array[(Int, Double)]] = cents.collect()
-      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-      .groupBy(_.get(0)).map { case (cid, rs) =>
-        cid -> rs.map(r => (r.getInt(1), r.getDouble(2))).sortBy(_._1)
-      }
-    val rCols = radii.columns
-    val cosrIdx = rCols.indexOf("cosr")
-    val sinrIdx = rCols.indexOf("sinr")
-    val cntIdx = rCols.indexOf("cnt") // -1 on pre-cnt stats
-    val radiiBy: Map[Any, (Double, Double, Long)] = radii.collect().map { r =>
-      // same defaults as the distributed left-outer join: missing/null
-      // stats mean widest radius (probe it) and zero claimed members
-      val cosr = if (cosrIdx < 0 || r.isNullAt(cosrIdx)) -1.0
-        else r.getDouble(cosrIdx)
-      val sinr = if (sinrIdx < 0 || r.isNullAt(sinrIdx)) 0.0
-        else r.getDouble(sinrIdx)
-      val cnt = if (cntIdx < 0 || r.isNullAt(cntIdx)) 0L
-        else r.getAs[Number](cntIdx).longValue()
-      r.get(0) -> ((cosr, sinr, cnt))
-    }.toMap
-    val qxRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val pairRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    qRows.foreach { qr =>
-      if (!qr.isNullAt(1)) {
-        val qid = qr.get(0)
-        val qv = qr.getSeq[Any](1)
-        val bounds = centComp.toSeq.flatMap { case (cid, comps) =>
-          var dot = 0.0
-          var norm2 = 0.0
-          comps.foreach { case (dim, cx) =>
-            if (dim >= 0 && dim < qv.length && qv(dim) != null) {
-              val x = qv(dim).asInstanceOf[Double]
-              dot += x * cx
-              norm2 += x * x
-            }
-          }
-          if (norm2 <= 0.0) None
-          else {
-            val qcs = dot / math.sqrt(norm2)
-            val qcsC = math.max(-1.0, math.min(1.0, qcs))
-            val sinA = math.sqrt(math.max(0.0, 1.0 - qcsC * qcsC))
-            val (cosr, sinr, cnt) = radiiBy.getOrElse(cid, (-1.0, 0.0, 0L))
-            val ub = if (qcsC >= cosr) 1.0 else qcsC * cosr + sinA * sinr
-            val lb = if (qcsC < -cosr) -1.0 else qcsC * cosr - sinA * sinr
-            Some((cid, ub, lb, cnt))
-          }
-        }
-        if (bounds.nonEmpty) {
-          // t0 = lb of the first cell (lb-desc) at which cumulative
-          // membership reaches k; lb ties share a value, so tie order
-          // cannot change t0. Fewer than k counted members => -2.
-          var cum = 0L
-          var t0 = -2.0
-          bounds.sortBy(-_._3).foreach { case (_, _, lb, cnt) =>
-            cum += cnt
-            if (t0 == -2.0 && cum >= k) t0 = lb
-          }
-          val probed = bounds.filter { case (_, ub, _, _) => ub + 1e-9 >= t0 }
-          if (probed.nonEmpty) {
-            probed.foreach { case (cid, _, _, _) => pairRows += Row(qid, cid) }
-            qv.indices.foreach(d => qxRows += Row(qid, d, qv(d)))
-          }
-        }
-      }
-    }
-    if (pairRows.isEmpty)
-      // no query survived unit-normalization — empty, correctly-shaped out
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField("qid", qidType),
-          StructField("rank", IntegerType, nullable = false),
-          StructField("nid", cidType))))
-    val pairsDf = spark.createDataFrame(
-      java.util.Arrays.asList(pairRows.toSeq: _*),
-      StructType(Seq(StructField("qid", qidType),
-        StructField("cid", cidType))))
-    val qxDf = spark.createDataFrame(
-      java.util.Arrays.asList(qxRows.toSeq: _*),
-      StructType(Seq(StructField("qid", qidType),
-        StructField("dim", IntegerType, nullable = false),
-        StructField("x", DoubleType))))
-    val probeCids = pairRows.map(_.get(1)).distinct.toSeq
-    // ONE partition-pruned pass over the probed cells — identical to the
-    // distributed path's final job (raw-x sim = |q| × cosine: same
-    // per-query order, same ties)
-    val cellRows = spark.read.format("graft").load(cellsPath(root))
-      .filter(col("cid").isin(probeCids: _*))
-      .select(col("cid"), col("nid"),
-        posexplode(col("uvec")).as(Seq("dim", "nx")))
-    val scored = cellRows.join(broadcast(pairsDf), Seq("cid"))
-      .join(broadcast(qxDf), Seq("qid", "dim"))
-      .groupBy("qid", "nid").agg(sum(col("nx") * col("x")).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"))
+      .select(col("qid"), col("qv"), probe(col("qv")).as("probe"))
+      .transform(Checkpoints.stabilize(_, eager = false))
+    // the one planning action: an RDD aggregate is a single job with no
+    // shuffle stage, and it fills the stabilized frame's blocks on the way
+    val cidCounts = q.select(explode(col("probe"))).rdd
+      .aggregate(Map.empty[Any, Long])(
+        (m, r) => m.updated(r.get(0), m.getOrElse(r.get(0), 0L) + 1L),
+        (a, b) => b.foldLeft(a) { case (m, (c, n)) =>
+          m.updated(c, m.getOrElse(c, 0L) + n) })
+    val pairs =
+      q.select(col("qid"), col("qv"), explode(col("probe")).as("cid"))
+    val fits = cidCounts.values.sum.toDouble * meta.dims * 8 <=
+      org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
+        .sessionState.conf.autoBroadcastJoinThreshold
+    val scored = spark.read.format("graft").load(cellsPath(root))
+      .filter(if (cidCounts.isEmpty) lit(false)
+        else col("cid").isin(cidCounts.keys.toSeq: _*))
+      .join(if (fits) broadcast(pairs) else pairs, "cid")
+      .select(col("qid"), col("nid"),
+        Ann.pairDot(col("qv"), col("uvec"), meta.dims).as("sim"))
+    Ann.topK(scored, k, queries = Some(q))
   }
 }

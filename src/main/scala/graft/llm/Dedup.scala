@@ -16,10 +16,7 @@ import org.apache.spark.sql.functions._
   * shingles are the skew risk; `maxKeyFreq` drops join keys whose document
   * frequency exceeds a cutoff (the standard prefix-filter trick).
   */
-object Dedup {
-
-  /** Set to "true" to log the MinHash candidate-pair count (an extra job). */
-  val LOG_CANDIDATES_KEY = "spark.graft.dedup.logCandidates"
+object Dedup extends org.apache.spark.internal.Logging {
 
   /** Exact duplicate groups by content hash (hash-groupBy, one shuffle of
     * (hash, id) pairs only — never the text). */
@@ -763,8 +760,7 @@ object Dedup {
     Option(lastSplit.get(op))
 
   /** Record + surface the split decision. The summary logs at WARN level
-    * UNCONDITIONALLY when anything split (not behind the opt-in
-    * logCandidates conf): the cap silently trades recall away, and a
+    * whenever anything split: the cap silently trades recall away, and a
     * 100 TB run that subdivided its biggest cluster must not look
     * identical to one that didn't. */
   private def recordSplit(
@@ -775,7 +771,7 @@ object Dedup {
       if (oversized.isEmpty) 0 else oversized.map(o => planesFor(o._2, cap)).max)
     lastSplit.put(op, rep)
     if (rep.groupsSplit > 0)
-      System.err.println(s"[graft-dedup] WARN $op near-dup: " +
+      logWarning(s"[graft-dedup] WARN $op near-dup: " +
         s"${rep.groupsSplit} group(s) over cap $cap (largest " +
         s"${rep.largestGroup}; ${rep.docsInSplitGroups} docs affected) " +
         s"residual-LSH subdivided with <= ${rep.maxPlanes} planes — pairs " +
@@ -924,11 +920,6 @@ object Dedup {
     // consumer and doubles as the materialization job
     val cands = minhashCandidatePairs(df, idCol, textCol, numHashes, bands)
       .transform(Checkpoints.stabilize(_, eager = false))
-    // Attributable-bench metric: a regression here is a candidate explosion
-    // (s-curve vs corpus similarity profile), not a plan defect. Opt-in —
-    // the count is an extra job, so it must not fire for ordinary callers.
-    if (df.sparkSession.conf.getOption(LOG_CANDIDATES_KEY).contains("true"))
-      System.err.println(s"[graft-dedup] minhash candidate pairs: ${cands.count()}")
     verifyPairsExact(df, idCol, textCol, cands, minJaccardPct)
   }
 

@@ -1041,6 +1041,41 @@ class LlmOperatorsSuite extends GraftFunSuite {
     val oneCellFiles = snap.files.count(_.rangeKey.contains(s"cid=${allCids.head}"))
     assert(oneCellFiles < snap.files.length,
       "one-cell scan must not touch every partition's files")
+
+    // the caller's query subtree runs ONCE per call: the planning action
+    // fills the lazily stabilized query frame the scoring job then reads
+    withTempTable { qDir =>
+      emb.write.format("graft").save(qDir)
+      val evals = spark.sparkContext.longAccumulator("ann_query_evals")
+      val counted = udf { (v: Seq[Float]) => evals.add(1L); v }
+      val qTable = spark.read.format("graft").load(qDir)
+        .filter($"vec_id" < 4 || $"vec_id" === 500L)
+        .select($"vec_id", counted($"embedding").as("embedding"))
+      val once = AnnIndex.topK(spark, idx, qTable, "vec_id", "embedding",
+          k = 7)
+        .select("qid", "rank", "nid").as[(Long, Int, Long)].collect().toSet
+      assert(evals.value == 5L,
+        s"5 query rows evaluated ${evals.value} times by one topK call")
+      assert(once == want,
+        s"index != brute: missing ${want -- once}, extra ${once -- want}")
+    }
+  }
+
+  test("AnnIndex.topK: a batch that repeats a query id fails, naming it") {
+    val rndv = new scala.util.Random(5)
+    val emb = (0 until 60).map(i =>
+        (i.toLong, Array.fill(8)(rndv.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files
+      .createTempDirectory("ann_dup_").toString + "/ix"
+    AnnIndex.build(spark, idx, emb, "vec_id", "embedding", nCentroids = 4)
+    // identical copies at k = 1: only one copy's row can win the rank
+    val queries = emb.filter($"vec_id" < 3).union(emb.filter($"vec_id" === 1L))
+    val e = intercept[Exception](AnnIndex.topK(spark, idx, queries,
+      "vec_id", "embedding", k = 1).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("duplicate query id 1"), msgs)
   }
 
   test("AnnIndex.syncFromTable: index follows the corpus table's feed and " +
