@@ -7,14 +7,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: every method is banded/bucketed — candidate pairs are only
   * generated WITHIN a join key (content hash, shared shingle, LSH band),
-  * never via an all-pairs cross join — and the hot paths are expressed as
-  * exploded relational plans (narrow shingle assembly + explode +
-  * hash-aggregate) rather than per-row array lambdas: higher-order-function
-  * lambdas evaluate interpreted in Spark, while the exploded form stays
-  * inside whole-stage codegen and parallelizes by rows, not documents. At
-  * 100 TB the hot
-  * shingles are the skew risk; `maxKeyFreq` drops join keys whose document
-  * frequency exceeds a cutoff (the standard prefix-filter trick).
+  * never via an all-pairs cross join — and no hot path evaluates a
+  * higher-order-function lambda (those run interpreted in Spark). Word
+  * k-grams and MinHash signatures come from one compiled per-document
+  * kernel ([[Shingles]]). At 100 TB the hot shingles are the skew risk;
+  * `maxKeyFreq` drops join keys whose document frequency exceeds a cutoff
+  * (the standard prefix-filter trick).
   */
 object Dedup extends org.apache.spark.internal.Logging {
 
@@ -24,44 +22,23 @@ object Dedup extends org.apache.spark.internal.Logging {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
 
-  /** Word k-gram shingles as ROWS (doc_id, s), assembled narrowly per
-    * document and exploded — zero shuffles. `dedupe` controls per-document
-    * shingle dedup (`array_distinct`); pair-counting consumers need it,
-    * duplicate-insensitive aggregates (e.g. `min` in MinHash) skip it. */
+  /** Word k-gram shingles as ROWS (doc_id, s), built per document by the
+    * [[Shingles]] kernel and exploded — zero shuffles. `dedupe` keeps each
+    * document's first occurrence of a shingle only; pair-counting
+    * consumers need it. */
   def shingleRows(
       df: DataFrame, idCol: String, textCol: String, k: Int = 3,
-      dedupe: Boolean = true): DataFrame = {
-    // Shingles assembled NARROWLY per row (transform + slice over the token
-    // array), then exploded: zero shuffles. The previous posexplode +
-    // window-lead form shuffled AND sorted the entire token stream on
-    // doc_id before the first real operator — at 100 TB that window is the
-    // dominant cost of every shingle consumer. `array_distinct` gives the
-    // same per-document dedup a global `distinct()` did for pair-counting
-    // consumers, again without an exchange.
-    val toks = TextAnalysis.tokens(col(textCol))
-    val n = size(toks)
-    val grams0 = transform(sequence(lit(1), n - (k - 1)),
-      i => concat_ws(" ", slice(toks, i, lit(k))))
-    val grams = when(n >= k,
-      if (dedupe) array_distinct(grams0) else grams0)
-      .otherwise(array().cast("array<string>"))
-    // parallelism floor: shingle assembly is the scan stage's dominant
-    // compute and otherwise runs on however few splits the table planned
-    Parallelism.fanOut(df, idCol)
-      .select(col(idCol).as("doc_id"), explode(grams).as("s"))
-  }
+      dedupe: Boolean = true): DataFrame =
+    // parallelism floor: tokenizing is the scan stage's dominant compute
+    // and otherwise runs on however few splits the table planned
+    Parallelism.fanOut(df, idCol).select(col(idCol).as("doc_id"), explode(
+      Shingles.gramsCol(TextAnalysis.tokens(col(textCol)), k, dedupe)).as("s"))
 
-  /** Word k-gram shingles as a per-row array column (1-based positions,
-    * distinct) — convenience form for small inputs; prefer `shingleRows`
-    * in pipelines. */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val n = size(toks)
-    when(n >= k, array_distinct(transform(
-      sequence(lit(1), n - (k - 1)),
-      i => concat_ws(" ", (0 until k).map(o => element_at(toks, i + o)): _*))))
-      .otherwise(array().cast("array<string>"))
-  }
+  /** Word k-gram shingles as a per-row array column: each shingle's first
+    * occurrence, in text order. Null text and texts with fewer than `k`
+    * tokens give an empty array. */
+  def shingles(text: Column, k: Int = 3): Column =
+    Shingles.gramsCol(TextAnalysis.tokens(text), k, distinct = true)
 
   /** Exact n-gram-Jaccard near-duplicate pairs via an inverted shingle
     * index: self-join on shingle, count shared shingles per pair. Returns
@@ -132,25 +109,20 @@ object Dedup extends org.apache.spark.internal.Logging {
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = TextAnalysis.tokens(col(textCol))
-    val n = size(toks)
-    val grams0 = transform(sequence(lit(1), n - (k - 1)),
-      i => concat_ws(" ", slice(toks, i, lit(k))))
+    val grams = Shingles.gramsCol(TextAnalysis.tokens(col(textCol)), k,
+      distinct = false)
     // 128-bit gram identity — same exactness-by-wide-hash contract as
     // [[ngramJaccardPairs]]; a collision could only extend one span by
-    // one gram
-    val hashed = when(n >= k, transform(grams0,
-        g => struct(xxhash64(g).as("h1"), xxhash64(lit(1L), g).as("h2"))))
-      .otherwise(array().cast("array<struct<h1:bigint,h2:bigint>>"))
+    // one gram. Strings die right after the explode.
     // stabilized: the frequency aggregate and the semi-join probe both
-    // read it — one tokenize pass (fanned out: gram hashing dominates the
+    // read it — one tokenize pass (fanned out: tokenizing dominates the
     // scan stage). LAZY: the dup-frequency broadcast build is the first
     // consumer and doubles as the materialization job
     val pos = Checkpoints.stabilize(
       Parallelism.fanOut(df, idCol)
-        .select(col(idCol).as("doc_id"), posexplode(hashed).as(Seq("p", "h")))
+        .select(col(idCol).as("doc_id"), posexplode(grams).as(Seq("p", "g")))
         .select(col("doc_id"), col("p").cast("long").as("p"),
-          col("h.h1"), col("h.h2")),
+          xxhash64(col("g")).as("h1"), xxhash64(lit(1L), col("g")).as("h2")),
       eager = false)
     val dup = pos.groupBy("h1", "h2")
       .agg(countDistinct(col("doc_id")).as("docs"))
@@ -256,20 +228,20 @@ object Dedup extends org.apache.spark.internal.Logging {
     val localMax = pairs.sparkSession.conf
       .getOption("spark.graft.dedup.localClusterMaxPairs").map(_.toLong)
       .getOrElse(1L << 20)
-    // validated, not clamped: at localMax >= Int.MaxValue the limit could
-    // no longer return the (localMax+1)th overflow row and clustering
-    // would silently run on a truncated pair list (and localMax+1 would
-    // overflow the Int limit argument)
-    require(localMax >= 0 && localMax < Int.MaxValue,
+    require(localMax >= 0,
       "spark.graft.dedup.localClusterMaxPairs must be in [0, " +
       s"${Int.MaxValue}), got $localMax")
     // ONE action decides the path AND (on the local path) delivers the
     // rows: limit(localMax+1) returns everything when the list fits, and
     // its (localMax+1)th row is the overflow signal — the previous
     // count-then-collect spelling paid two scheduled jobs for the same
-    // information. Driver memory stays bounded by localMax either way.
-    val gate = p0.limit((localMax + 1L).toInt).collect()
-    if (gate.length <= localMax) return localClusters(p0.sparkSession, gate)
+    // information. Driver memory stays bounded by localMax either way. At
+    // localMax >= Int.MaxValue the Int limit could not return that overflow
+    // row, so such a cap always takes the distributed path.
+    if (localMax < Int.MaxValue) {
+      val gate = p0.limit((localMax + 1L).toInt).collect()
+      if (gate.length <= localMax) return localClusters(p0.sparkSession, gate)
+    }
     // cache edges PRE-PARTITIONED on the join key: every round joins on
     // dst, and a cached hash layout means only the (small) label side
     // shuffles per round, never the edge list
@@ -383,31 +355,19 @@ object Dedup extends org.apache.spark.internal.Logging {
       .filter(col("overlap") >= minOverlap)
   }
 
-  /** MinHash signatures (doc_id, sig: array<bigint>[numHashes]) computed as
-    * a single hash-aggregate over exploded shingles. Each shingle string is
-    * hashed ONCE (xxhash64); the k hash functions derive from it with a
-    * rotate-xor family `g_i(h) = rotl(h, r_i) ^ c_i` — bitwise only (cheap,
-    * ANSI-overflow-free), fixed seeds so results are deterministic.
-    * No lambdas — one shuffle of (doc_id, shingle). */
+  /** MinHash signatures (doc_id, sig: array<bigint>[numHashes]), one row
+    * per input row that has at least `shingleK` tokens. Each shingle is
+    * hashed once (xxhash64); the hash functions derive from it with a
+    * rotate-xor family `g_i(h) = rotl(h, r_i) ^ c_i` under fixed constants
+    * (see [[Shingles]]). One narrow projection: no explode, no shuffle. */
   def minhashSignatures(
       df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, shingleK: Int = 3): DataFrame = {
-    // dedupe=false: min() is duplicate-insensitive, so the distinct's
-    // full shuffle would be pure waste here.
-    val sh = shingleRows(df, idCol, textCol, shingleK, dedupe = false)
-      .withColumn("h", xxhash64(col("s")))
-    val rng = new scala.util.Random(42)
-    val consts = Array.fill(numHashes)(rng.nextLong())
-    def g(i: Int): Column = {
-      val r = (i * 7 + 13) % 64
-      shiftleft(col("h"), r).bitwiseOR(shiftrightunsigned(col("h"), 64 - r))
-        .bitwiseXOR(lit(consts(i)))
-    }
-    val mins = (0 until numHashes).map(i => min(g(i)).as(s"m$i"))
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
+      numHashes: Int = 64, shingleK: Int = 3): DataFrame =
+    // parallelism floor: tokenizing is the scan stage's dominant compute
+    Parallelism.fanOut(df, idCol)
+      .select(col(idCol).as("doc_id"), Shingles.minhashCol(
+        TextAnalysis.tokens(col(textCol)), shingleK, numHashes).as("sig"))
+      .filter(col("sig").isNotNull)
 
   /** Per-document banded LSH keys `(doc_id, band, key)` — the unit both the
     * self-join dedup and the persistent [[MinhashIndex]] consume. A
@@ -425,10 +385,10 @@ object Dedup extends org.apache.spark.internal.Logging {
       "(bands * rowsPerBand == numHashes)")
     val rows = numHashes / bands
     val sig = minhashSignatures(df, idCol, textCol, numHashes, shingleK)
-    sig.select(col("doc_id"), explode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), hash(slice(col("sig"), b * rows + 1, lit(rows)), b)
-          .as("key")))).as("bk"))
+    sig.select(col("doc_id"), explode(array((0 until bands).map(b =>
+        struct(lit(b).as("band"),
+          hash(slice(col("sig"), b * rows + 1, rows), lit(b)).as("key"))): _*))
+        .as("bk"))
       .select(col("doc_id"), col("bk.band"), col("bk.key"))
   }
 
@@ -439,7 +399,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3): DataFrame = {
     // eager localCheckpoint: the band self-join consumes this frame twice —
-    // without it the whole 64-aggregate signature pipeline runs twice
+    // without it the tokenize + signature scan runs twice
     val banded = bandedSignatureRows(df, idCol, textCol, numHashes, bands,
         shingleK)
       .transform(Checkpoints.stabilize)
@@ -914,7 +874,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // LSH) so the signature pipeline over the full corpus runs exactly once;
     // the exact-Jaccard verify then re-tokenizes only the candidate
     // documents. localCheckpoint (NOT persist): it truncates the huge
-    // 64-aggregate signature lineage — keeping every downstream plan small —
+    // signature and band-join lineage — keeping every downstream plan small —
     // and leaves no CacheManager entry to slow later queries' planning.
     // LAZY: the verify step's candidate-id broadcast build is the first
     // consumer and doubles as the materialization job
@@ -925,29 +885,31 @@ object Dedup extends org.apache.spark.internal.Logging {
 
   /** Exact shingle-Jaccard verification of an (a_id, b_id) candidate list
     * against the corpus texts: re-tokenizes ONLY candidate documents,
-    * keeps pairs at `minJaccardPct` (integer percentage — engine-exact).
-    * Output: (a_id, b_id, inter, uni). */
+    * keeps pairs that share a shingle and reach `minJaccardPct` (integer
+    * percentage — engine-exact). Output: (a_id, b_id, inter, uni), one row
+    * per candidate row.
+    *
+    * Doc-level: each candidate document becomes ONE row holding its
+    * distinct shingles, and a pair's `inter` is the size of the two
+    * arrays' intersection — the pairs join on document ids only, never on
+    * shingles. */
   def verifyPairsExact(
       df: DataFrame, idCol: String, textCol: String, cands: DataFrame,
       minJaccardPct: Int, shingleK: Int = 3): DataFrame = {
     val candIds = cands.select(explode(array(col("a_id"), col("b_id"))).as("cand_id"))
       .distinct()
-    val candDocs = df.join(broadcast(candIds),
-      col(s"`$idCol`") === col("cand_id"), "left_semi")
-    // Checkpointed: consumed three times below (sizes + both verify joins).
-    val sh = shingleRows(candDocs, idCol, textCol, shingleK)
+    // stabilized: both pair sides read it
+    val sh = df.join(broadcast(candIds),
+        col(s"`$idCol`") === col("cand_id"), "left_semi")
+      .select(col(s"`$idCol`").as("doc_id"), shingles(col(textCol), shingleK).as("sh"))
       .transform(Checkpoints.stabilize)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = cands
-      .join(sh.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(sh.as("sb"), col("b_id") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("sz", "a_size"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("sz", "b_size"), "b_id")
-      .withColumn("uni", col("a_size") + col("b_size") - col("inter"))
-      .filter(col("inter") * 100 >= col("uni") * minJaccardPct)
-      .select(col("a_id"), col("b_id"), col("inter"), col("uni"))
+    val inter = size(array_intersect(col("sa"), col("sb"))).cast("long")
+    cands.select(col("a_id"), col("b_id"))
+      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sa")), "a_id")
+      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sb")), "b_id")
+      .select(col("a_id"), col("b_id"), inter.as("inter"),
+        (size(col("sa")).cast("long") + size(col("sb")) - inter).as("uni"))
+      .filter(col("inter") > 0 && col("inter") * 100 >= col("uni") * minJaccardPct)
   }
 }
 

@@ -898,6 +898,20 @@ class LlmOperatorsSuite extends GraftFunSuite {
     } finally spark.conf.unset(key)
   }
 
+  test("duplicate clusters: localClusterMaxPairs at Long.MaxValue takes the " +
+      "distributed path with the same clusters; a negative value fails") {
+    val pairs = Seq((10L, 7L), (7L, 5L), (5L, 9L), (20L, 21L), (31L, 30L))
+      .toDF("a_id", "b_id")
+    def clusters() = Dedup.duplicateClusters(pairs, "a_id", "b_id")
+      .as[(Long, Long)].collect().toMap
+    val default = clusters()
+    val key = "spark.graft.dedup.localClusterMaxPairs"
+    assert(withSQLConf(key -> Long.MaxValue.toString)(clusters()) == default)
+    val e = intercept[IllegalArgumentException](
+      withSQLConf(key -> "-1")(clusters()))
+    assert(e.getMessage.contains(s"$key must be in [0, ${Int.MaxValue}), got -1"))
+  }
+
   test("stabilizeFlagged: flag detected inside the ONE materialization job") {
     val df = Seq((1L, 1L, false), (2L, 1L, true), (3L, 2L, false))
       .toDF("id", "cluster_id", "chg")
@@ -960,6 +974,93 @@ class LlmOperatorsSuite extends GraftFunSuite {
     assert(s10.filter(_ % 2 == 0).subsetOf(s25.filter(_ % 2 == 0)))
     // zero rate drops the stratum entirely
     assert(ids(Map("en" -> 0, "de" -> 10000)).forall(_ % 2 == 1))
+  }
+
+  test("shingle kernel == the relational k-gram and MinHash spelling it " +
+      "replaced") {
+    // the replaced spelling, kept here as the reference: k-grams by an
+    // interpreted transform/slice/concat_ws lambda, signatures by a 64-min
+    // aggregate over the exploded shingles
+    def refGrams(text: org.apache.spark.sql.Column, k: Int,
+        dedupe: Boolean): org.apache.spark.sql.Column = {
+      val toks = TextAnalysis.tokens(text)
+      val n = size(toks)
+      val grams0 = transform(sequence(lit(1), n - (k - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(k))))
+      when(n >= k, if (dedupe) array_distinct(grams0) else grams0)
+        .otherwise(array().cast("array<string>"))
+    }
+    def refSignatures(df: org.apache.spark.sql.DataFrame, numHashes: Int,
+        k: Int): org.apache.spark.sql.DataFrame = {
+      val sh = df.select(col("doc_id"), explode(refGrams(col("text"), k,
+          dedupe = false)).as("s"))
+        .withColumn("h", xxhash64(col("s")))
+      val rng = new scala.util.Random(42)
+      val consts = Array.fill(numHashes)(rng.nextLong())
+      val mins = (0 until numHashes).map { i =>
+        val r = (i * 7 + 13) % 64
+        min(shiftleft(col("h"), r).bitwiseOR(shiftrightunsigned(col("h"), 64 - r))
+          .bitwiseXOR(lit(consts(i)))).as(s"m$i")
+      }
+      sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+        .select(col("doc_id"),
+          array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
+    }
+    val words = new scala.util.Random(11)
+    val long = (0 until 1200).map(_ => s"w${words.nextInt(40)}").mkString(" ")
+    val docs = Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "Alpha"), (4L, "alpha beta"),
+      (5L, "one two three"), (6L, "a b c a b c a b c d"),
+      (7L, "The QUICK Brown fox JUMPS over THE quick brown FOX"),
+      (8L, "Hello, world! It's a test... (really): yes? -- no; maybe."),
+      (9L, "Crème brûlée à la carte: naïve façade, Ünïcödé ß straße €5"),
+      (10L, long)).toDF("doc_id", "text")
+    def ordered(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+    for (k <- Seq(1, 3, 5)) {
+      assert(ordered(docs.select(col("doc_id"), Dedup.shingles(col("text"), k))) ==
+        ordered(docs.select(col("doc_id"), refGrams(col("text"), k, dedupe = true))),
+        s"shingles k=$k")
+      for (dedupe <- Seq(true, false)) {
+        val ref = docs.select(col("doc_id"),
+          explode(refGrams(col("text"), k, dedupe)).as("s"))
+        assert(rowsOf(Dedup.shingleRows(docs, "doc_id", "text", k, dedupe)) ==
+          rowsOf(ref), s"shingleRows k=$k dedupe=$dedupe")
+      }
+    }
+    for ((numHashes, k) <- Seq((64, 3), (8, 2))) {
+      val got = ordered(Dedup.minhashSignatures(docs, "doc_id", "text",
+        numHashes, k))
+      assert(got == ordered(refSignatures(docs, numHashes, k)),
+        s"minhashSignatures numHashes=$numHashes k=$k")
+      // null, empty and too-short documents have no signature
+      assert(got.keySet == (if (k == 3) Set(5L, 6L, 7L, 8L, 9L, 10L)
+        else Set(4L, 5L, 6L, 7L, 8L, 9L, 10L)))
+    }
+  }
+
+  test("bandedSignatureRows: band keys equal the rows stored MinhashIndex " +
+      "tables hold") {
+    // captured before the per-document kernel replaced the aggregate
+    // spelling: a stored index keeps band-matching new batches only while
+    // these stay equal
+    val docs = Seq((1L, "The quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumped over a lazy dog!"),
+      (3L, "Graft tables keep MinHash signatures per band")).toDF("doc_id", "text")
+    val expected = Map(
+      1L -> Seq(-637075995, -210662093, 396764810, -1994116342, 1967083793,
+        1892779714, -738046676, 717410662, 15411986, 1740233382, -185035543,
+        1580579793, -1621952981, 1914402723, -163067253, -1306713408),
+      2L -> Seq(-519140164, 524379218, 1599612131, 916077869, -1090264215,
+        1761513076, 980363364, 568892110, 228288264, 730077898, 1612344579,
+        930512963, -2083048828, -315255032, 1138166916, -1971076578),
+      3L -> Seq(-570874059, 1140025024, 1953842767, -93689626, 1603773700,
+        -96174996, -1978916854, 1506413492, -1714551981, 1562323227,
+        -1460780528, -218400738, -153897746, 422293673, 624952905, 976624417))
+    val got = Dedup.bandedSignatureRows(docs, "doc_id", "text")
+      .as[(Long, Int, Int)].collect().toSeq.sorted
+    assert(got == expected.toSeq.flatMap { case (d, keys) =>
+      keys.zipWithIndex.map { case (key, band) => (d, band, key) } }.sorted)
   }
 
   test("MinhashIndex: incremental ingest over two batches equals one-shot " +

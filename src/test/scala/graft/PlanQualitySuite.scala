@@ -200,6 +200,47 @@ class PlanQualitySuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("minhashSignatures plans no Exchange and no Generate; " +
+      "verifyPairsExact joins on no shingle column") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    // 40 rows: the local relation plans as many splits as the session has
+    // cores, so Parallelism.fanOut's floor stays off, as it does on any
+    // table with at least that many splits
+    val docs = (1 to 40).map(i => (i.toLong,
+      (0 until 30).map(j => s"w${(i * 7 + j) % 23}").mkString(" ")))
+      .toDF("doc_id", "text")
+    def planOf(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try df.queryExecution.executedPlan
+      finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+    val sigPlan = planOf(graft.llm.Dedup.minhashSignatures(docs, "doc_id", "text"))
+    assert(sigPlan.collect {
+      case e: Exchange => e
+      case g: GenerateExec => g
+    }.isEmpty, s"signatures must be one narrow projection:\n$sigPlan")
+
+    val cands = Seq((1L, 24L), (2L, 25L), (3L, 9L)).toDF("a_id", "b_id")
+    val verifyPlan = planOf(graft.llm.Dedup.verifyPairsExact(docs, "doc_id",
+      "text", cands, minJaccardPct = 10))
+    val keys = verifyPlan.collect {
+      case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+      case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
+      case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+    }.flatten
+    assert(keys.nonEmpty, s"expected the pair joins:\n$verifyPlan")
+    // document ids are longs; a shingle is a string, a doc's shingles an array
+    keys.foreach { k =>
+      assert(!k.dataType.isInstanceOf[org.apache.spark.sql.types.StringType] &&
+        !k.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType],
+        s"join key $k is a shingle column:\n$verifyPlan")
+    }
+  }
+
   test("chunking and split assignment plan ZERO exchanges; heavy hitters " +
       "shuffles only vocab-sized aggregates") {
     import spark.implicits._
