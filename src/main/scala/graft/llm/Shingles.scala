@@ -18,10 +18,9 @@ import org.apache.spark.unsafe.Platform
   * A k-gram is its `k` tokens joined by one space. Its MinHash input is
   * Spark's `xxhash64` of that string's UTF-8 bytes (seed 42), and hash
   * function `i` is `rotl(h, (7i + 13) mod 64) ^ c_i` with `c_i` the i-th
-  * long of `Random(42)`; the minimum is taken as a signed long. These are
-  * the values the relational spelling computed, so band keys, and the
-  * [[MinhashIndex]] tables that store them, stay valid. Null text and
-  * documents with fewer than `k` tokens have no k-grams. */
+  * long of `Random(42)`; the minimum is taken as a signed long. Band keys
+  * stored in [[MinhashIndex]] tables depend on every one of these choices.
+  * Null text and documents with fewer than `k` tokens have no k-grams. */
 private[llm] object Shingles {
 
   /** The k-grams of `toks` in order; with `distinct`, only the first
