@@ -14,7 +14,13 @@ import org.apache.spark.sql.functions._
   *    corpus/2^planes on average.
   *  - `ivfTopK`: IVF — a coarse-centroid set partitions the corpus into
   *    cells; queries probe only the cells whose angular bound can still
-  *    beat their provisional kth-best, which keeps the result EXACT.
+  *    reach a kth-best threshold taken from cell metadata alone, which
+  *    keeps the result EXACT. Small corpora score flat instead.
+  *
+  * The IVF layout (unit rows → centroids → assignment → cell stats and
+  * cells, [[ivfLayout]]) and the probe planner ([[probeTopK]] over the
+  * compiled [[CellBound]]s) are built here once and shared by `ivfTopK`
+  * and the persisted [[AnnIndex]].
   *
   * Vector prep is NARROW ([[unitVecs]]: norms, LSH sign-sums and the
   * rescale are per-row array folds — zero exchanges); candidate scoring
@@ -137,13 +143,13 @@ object Ann {
   }
 
   /** Fold unit-normalized EXPLODED rows (id, dim, x) back into one
-    * `array<double>` per id, ordered by dim — for a pair producer whose
-    * exploded rows are ALREADY checkpointed (the semantic path, which
-    * needs them for centroid assignment anyway): one codegen'd
-    * collect_list aggregate over the checkpoint, no lambda anywhere
-    * (struct sort is lexicographic on (dim, x) and dim is unique per id;
-    * `.getField` extracts the components). Values are bit-identical to
-    * the exploded ones — no re-normalization. */
+    * `array<double>` per id, ordered by dim — for exploded rows that are
+    * ALREADY checkpointed because centroid assignment needs them anyway
+    * (the semantic pair path, the IVF cells of [[assignAndFold]]): one
+    * codegen'd collect_list aggregate over the checkpoint, no lambda
+    * anywhere (struct sort is lexicographic on (dim, x) and dim is unique
+    * per id; `.getField` extracts the components). Values are
+    * bit-identical to the exploded ones — no re-normalization. */
   private[llm] def foldUnitVectors(
       rows: DataFrame, id: String, x: String, vAs: String): DataFrame =
     rows.groupBy(id)
@@ -233,6 +239,208 @@ object Ann {
     }
   }
 
+  /** One IVF layout: centroids (cid, dim, cx), assignments (nid, cid,
+    * csim), cell stats (cid, cosr, sinr, cnt) and cells (cid, nid, uvec). */
+  private[llm] final case class IvfLayout(
+      cents: DataFrame, assign: DataFrame, stats: DataFrame, cells: DataFrame)
+
+  /** The IVF layout of `corpus`: unit rows → centroids ([[buildCentroids]],
+    * Lloyd per `spark.graft.ann.ivf.kmeansIters`) → [[assignAndFold]] →
+    * [[cellStats]]. Zero-norm vectors are dropped by [[unitRows]]. */
+  private[llm] def ivfLayout(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int): IvfLayout = {
+    // corpus unit rows feed three consumers (centroid set, assignment,
+    // cell fold) — an eager localCheckpoint runs the explode+norm pipeline
+    // once, truncates lineage (small downstream plans), and leaves no
+    // CacheManager entry to tax later queries' planning
+    val cu = unitRows(corpus, idCol, vecCol, "nid", "nx")
+      .transform(Checkpoints.stabilize)
+    // the centroid plan feeds the assignment and the cell bounds and is
+    // tiny (nCentroids × dims rows) — one small materialization beats
+    // re-running the seed scan (and any refinement passes) per consumer
+    val cents = Checkpoints.stabilize(
+      buildCentroids(corpus, idCol, cu, nCentroids))
+    val (assign, cells) = assignAndFold(cents, cu)
+    IvfLayout(cents, assign, cellStats(assign), cells)
+  }
+
+  /** Assign unit rows `cu` (nid, dim, nx) to their nearest centroid and fold
+    * each vector's components into one `uvec` array: (assignments (nid,
+    * cid, csim), stabilized for the stats and the cells; cells (cid, nid,
+    * uvec)). */
+  private[llm] def assignAndFold(
+      cents: DataFrame, cu: DataFrame): (DataFrame, DataFrame) = {
+    val assign = Checkpoints.stabilize(assignCells(cents)(cu, "nid", "nx"))
+    val cells = assign.select("cid", "nid")
+      .join(foldUnitVectors(cu, "nid", "nx", "uvec"), "nid")
+      .select(col("cid"), col("nid"), col("uvec"))
+    (assign, cells)
+  }
+
+  /** Cell stats (cid, cosr, sinr, cnt) of member rows (cid, csim): the
+    * cell's angular radius r is acos(min member csim), carried as (cos r,
+    * sin r) so the probe bound never round-trips through acos/cos (whose
+    * error amplifies to ~1e-8 near |csim|≈1 and could wrongly prune a
+    * near-tie cell); cnt counts the members. */
+  private[llm] def cellStats(members: DataFrame): DataFrame =
+    withSinr(members.groupBy("cid").agg(
+      greatest(lit(-1.0d), least(lit(1.0d), min(col("csim")))).as("cosr"),
+      count(lit(1)).as("cnt")))
+
+  /** (cid, cosr, sinr, cnt) from stats rows carrying cid, cosr and cnt. */
+  private[llm] def withSinr(stats: DataFrame): DataFrame =
+    stats.withColumn("sinr", sqrt(greatest(lit(0.0d),
+        lit(1.0d) - col("cosr") * col("cosr"))))
+      .select("cid", "cosr", "sinr", "cnt")
+
+  /** One cell's inputs to the probe bound: its centroid's unit components
+    * (`dims` ascending, `cx` aligned with them) and its stats — the angular
+    * radius as (cos r, sin r) and the live member count `cnt`. */
+  private[llm] final case class CellBound(
+      cid: Any, dims: Array[Int], cx: Array[Double],
+      cosr: Double, sinr: Double, cnt: Long)
+
+  /** Every cell's [[CellBound]], plus the cid column's type. */
+  private[llm] final case class CellBounds(
+      cells: Array[CellBound], cidType: org.apache.spark.sql.types.DataType) {
+    /** Vector length the centroids cover. */
+    def dims: Int =
+      cells.foldLeft(0)((m, c) => math.max(m, c.dims.lastOption.fold(0)(_ + 1)))
+  }
+
+  /** Collect centroid rows (cid, dim, cx) and stats rows (cid, cosr, sinr,
+    * cnt) — nCentroids rows each — into [[CellBounds]]. A cell without a
+    * stats row (or with pre-cnt stats) gets the widest radius and claims no
+    * members: it is always probed and never tightens the threshold —
+    * conservative costs a scan, the alternative costs exactness. */
+  private[llm] def cellBounds(cents: DataFrame, stats: DataFrame): CellBounds = {
+    val statsBy = stats.collect().map { r =>
+      def num(f: String): Option[Number] =
+        if (!stats.columns.contains(f) || r.isNullAt(r.fieldIndex(f))) None
+        else Some(r.getAs[Number](f))
+      r.getAs[Any]("cid") -> ((num("cosr").fold(-1.0)(_.doubleValue),
+        num("sinr").fold(0.0)(_.doubleValue), num("cnt").fold(0L)(_.longValue)))
+    }.toMap
+    val cells = cents.collect()
+      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .groupBy(_.get(0)).iterator.map { case (cid, rs) =>
+        val comps = rs.map(r => (r.getInt(1), r.getDouble(2))).sortBy(_._1)
+        val (cosr, sinr, cnt) = statsBy.getOrElse(cid, (-1.0, 0.0, 0L))
+        CellBound(cid, comps.map(_._1), comps.map(_._2), cosr, sinr, cnt)
+      }.toArray
+    CellBounds(cells, cents.schema("cid").dataType)
+  }
+
+  /** The cells query vector `qv` must scan for an exact top-`k`; empty for
+    * a null or zero-norm query (cosine undefined — it returns no rows, as
+    * everywhere in the ANN family).
+    *
+    * With a = angle(q, centroid) and r = the cell's radius, every member's
+    * cosine to q lies in [cos(a+r), cos(a-r)], expanded by the angle-sum
+    * identities on the stored (cos r, sin r) — no acos anywhere. Clamps: a+r
+    * past pi floors the interval at -1, a-r below 0 caps it at 1. Walking
+    * the cells in lower-bound-descending order until their member counts
+    * reach k proves "at least k members score >= t0"; a cell whose upper
+    * bound misses t0 then provably holds no top-k member. Fewer than k
+    * counted members gives t0 = -2: probe everything. cnt is maintained
+    * conservatively low by [[AnnIndex.syncFromTable]], which only ever
+    * weakens t0. The margin on ub absorbs double rounding, so the bound can
+    * only probe an extra cell, never skip a required one. */
+  private[llm] def probedCells(
+      cells: Array[CellBound], qv: scala.collection.Seq[Any], k: Int): Seq[Any] = {
+    if (qv == null) return Nil
+    // (cid, ub, lb, cnt) per cell; the norm runs over the centroid's dims
+    val bounds = cells.flatMap { c =>
+      var dot = 0.0
+      var norm2 = 0.0
+      var i = 0
+      while (i < c.dims.length) {
+        val d = c.dims(i)
+        if (d >= 0 && d < qv.length && qv(d) != null) {
+          val x = qv(d).asInstanceOf[Double]
+          dot += x * c.cx(i)
+          norm2 += x * x
+        }
+        i += 1
+      }
+      if (norm2 <= 0.0) None
+      else {
+        val qcs = math.max(-1.0, math.min(1.0, dot / math.sqrt(norm2)))
+        val sinA = math.sqrt(math.max(0.0, 1.0 - qcs * qcs))
+        val ub = if (qcs >= c.cosr) 1.0 else qcs * c.cosr + sinA * c.sinr
+        val lb = if (qcs < -c.cosr) -1.0 else qcs * c.cosr - sinA * c.sinr
+        Some((c.cid, ub, lb, c.cnt))
+      }
+    }
+    // lb ties share a value, so tie order cannot change t0
+    var cum = 0L
+    var t0 = -2.0
+    bounds.sortBy(-_._3).foreach { case (_, _, lb, cnt) =>
+      cum += cnt
+      if (t0 == -2.0 && cum >= k) t0 = lb
+    }
+    bounds.toSeq.collect { case (cid, ub, _, _) if ub + 1e-9 >= t0 => cid }
+  }
+
+  /** Exact cosine top-k of `queries` against `cells` (cid, nid, uvec), the
+    * cells of an IVF layout whose centroids and stats `bounds` holds.
+    * Output (qid, rank, nid); query ids must be unique per call.
+    *
+    * One plan at every batch size:
+    *  1. each query row gets its probed cells from [[probedCells]], run on
+    *     the executors over a broadcast of `bounds` — the threshold comes
+    *     from metadata alone, so the corpus is touched once and planning
+    *     collects no query vector to the driver;
+    *  2. the (qid, qv, probe) frame is stabilized lazily, so the one
+    *     planning action — pair counts per probed cid, at most nCentroids
+    *     rows — also runs the caller's query subtree, exactly once. Its cids
+    *     become `isin` literals on `cells` (a partition-pruned scan when
+    *     `cells` is a table range-partitioned by cid); its pair count
+    *     decides whether the (qid, qv, cid) side fits
+    *     `spark.sql.autoBroadcastJoinThreshold`;
+    *  3. the probed cells join their queries on cid and score per document
+    *     with [[pairDot]] on the raw query vector: |q|·cos ranks as the
+    *     cosine does, with the same ties;
+    *  4. [[topK]]'s window ranks, and checks in the same partitions that
+    *     each qid came from one query row. */
+  private[llm] def probeTopK(
+      bounds: CellBounds, cells: DataFrame,
+      queries: DataFrame, queryIdCol: String, queryVecCol: String,
+      k: Int): DataFrame = {
+    val spark = cells.sparkSession
+    val bc = spark.sparkContext.broadcast(bounds.cells)
+    val probe = udf(new org.apache.spark.sql.api.java.UDF1[
+        scala.collection.Seq[Any], Seq[Any]] {
+      def call(qv: scala.collection.Seq[Any]): Seq[Any] =
+        probedCells(bc.value, qv, k)
+    }, org.apache.spark.sql.types.ArrayType(bounds.cidType))
+    val q = queries
+      .select(col(s"`$queryIdCol`").as("qid"),
+        col(s"`$queryVecCol`").cast("array<double>").as("qv"))
+      .select(col("qid"), col("qv"), probe(col("qv")).as("probe"))
+      .transform(Checkpoints.stabilize(_, eager = false))
+    // the one planning action: an RDD aggregate is a single job with no
+    // shuffle stage, and it fills the stabilized frame's blocks on the way
+    val cidCounts = q.select(explode(col("probe"))).rdd
+      .aggregate(Map.empty[Any, Long])(
+        (m, r) => m.updated(r.get(0), m.getOrElse(r.get(0), 0L) + 1L),
+        (a, b) => b.foldLeft(a) { case (m, (c, n)) =>
+          m.updated(c, m.getOrElse(c, 0L) + n) })
+    val pairs =
+      q.select(col("qid"), col("qv"), explode(col("probe")).as("cid"))
+    val fits = cidCounts.values.sum.toDouble * bounds.dims * 8 <=
+      org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
+        .sessionState.conf.autoBroadcastJoinThreshold
+    val scored = cells
+      .filter(if (cidCounts.isEmpty) lit(false)
+        else col("cid").isin(cidCounts.keys.toSeq: _*))
+      .join(if (fits) broadcast(pairs) else pairs, "cid")
+      .select(col("qid"), col("nid"),
+        pairDot(col("qv"), col("uvec"), bounds.dims).as("sim"))
+    topK(scored, k, queries = Some(q))
+  }
+
   /** Per-query top-k of `scored(qid, nid, sim)`; ties break by id.
     *
     * With `queries` — one `qid` row per query row — a qid given twice fails
@@ -293,24 +501,9 @@ object Ann {
     topK(scored, k)
   }
 
-  /** IVF-style ANN: a deterministic sample of the corpus seeds the coarse
-    * centroids, optionally refined by Lloyd (k-means) iterations — set
-    * `spark.graft.ann.ivf.kmeansIters` (0 = plain first-N seeding; unset =
-    * one iteration; small corpora take the flat path below and never run
-    * Lloyd at all). Every vector is assigned to its nearest centroid
-    * by cosine. Same output shape as `bruteTopK`.
-    *
-    * EXACT, not approximate: each query first scores its nearest cell
-    * exhaustively, giving a provisional kth-best cosine `t`; it then probes
-    * only the cells whose angular upper bound `cos(max(0, angle(q,
-    * centroid) - cellRadius))` can still beat `t` (triangle inequality on
-    * the angular metric — a member of cell c is at most `radius(c)` away
-    * from its centroid, so its cosine to q is at most that bound). Skipped
-    * cells provably contain no top-k member, so the result equals
-    * `bruteTopK` while reading only the cells that matter. On a clustered
-    * corpus (real embedding workloads) radii are small and most cells
-    * prune; on unstructured data the bound degrades gracefully toward an
-    * exhaustive scan — exactness is never traded away.
+  /** IVF-style ANN: exact cosine top-k for each query vector. Same output
+    * shape as `bruteTopK`; query ids must be unique per call — a qid given
+    * twice fails the query with an error naming it, on both paths below.
     *
     * ADAPTIVE: below `spark.graft.ann.ivf.smallCorpusBytes` (default
     * 256 MB, judged from plan-time statistics) building and probing a
@@ -319,122 +512,53 @@ object Ann {
     * FAISS's flat-search fallback for small indexes. Same exact result,
     * minimal job count.
     *
-    * The Lloyd step is PURE relational algebra over the already-exploded
-    * unit rows: assign (broadcast join + hash-agg + window) → per-(cell,
-    * dim) mean → re-normalize to unit length. Each iteration is one extra
-    * pass over the exploded corpus — no per-vector lambdas, no driver-side
-    * math, so it scales exactly like the assignment it improves.
+    * Above it, [[ivfLayout]] builds the cells: a deterministic first-N-by-id
+    * sample of the corpus seeds the coarse centroids, refined by Lloyd
+    * (k-means) iterations — set `spark.graft.ann.ivf.kmeansIters` (0 =
+    * plain seeding; unset = one iteration) — and every vector is assigned to
+    * its nearest centroid by cosine. The Lloyd step is PURE relational
+    * algebra over the already-exploded unit rows: assign (broadcast join +
+    * hash-agg + window) → per-(cell, dim) mean → re-normalize to unit
+    * length — no per-vector lambdas, no driver-side math. The centroids and
+    * cell stats (nCentroids rows each) compile to [[CellBound]]s, and
+    * [[probeTopK]] — the planner [[AnnIndex.topK]] runs too — probes each
+    * query's cells. Its kth-best threshold comes from cell METADATA alone
+    * (member counts and angular radii), and a cell is probed only when its
+    * angular upper bound can still reach it, so skipped cells provably hold
+    * no top-k member: EXACT, not approximate. On a clustered corpus radii
+    * are small and most cells prune; on unstructured data the bound
+    * degrades toward an exhaustive scan — exactness is never traded away.
     */
   def ivfTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int = 10, nCentroids: Int = 16): DataFrame = {
-    // Plan-time corpus size (no job) steers the adaptive choices below —
-    // Lloyd refinement and the probe strategy. Below the threshold the
-    // bound-pruning machinery costs more in orchestration (each eager
-    // materialization and broadcast is a whole scheduled job — a measured
-    // ~30 jobs at ~50 ms apiece on a toy corpus) than pruning can possibly
-    // save, so small corpora probe every cell in one pass instead (the
-    // same flat-search fallback FAISS applies to small indexes). Identical
-    // exact results either way; only the job count changes.
+    // Plan-time corpus size (no job) picks the path. Below the threshold
+    // the layout and planning jobs (each eager materialization and
+    // collect is a whole scheduled job, ~50 ms apiece on a toy corpus)
+    // cost more than pruning can possibly save; identical exact results
+    // either way.
     val smallBytes = corpus.sparkSession.conf
       .getOption("spark.graft.ann.ivf.smallCorpusBytes").map(_.toLong)
       .getOrElse(256L << 20)
     val smallCorpus = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(corpus).queryExecution.optimizedPlan.stats.sizeInBytes <
       BigInt(smallBytes)
-    val qu = unitRows(queries, queryIdCol, queryVecCol, "qid", "qx")
     if (smallCorpus) {
       // flat probe (nprobe = nlist): one exhaustive scoring pass, no cell
-      // index at all — building centroids/assignments whose output the
-      // flat scoring never reads would spend exactly the jobs this path
-      // exists to avoid. Identical exact result as the pruning path
-      // (suite-asserted row-for-row). The unit rows are NOT stabilized
-      // here: this path has exactly one consumer, so an eager
-      // materialization job would be pure overhead.
+      // index at all. The unit rows are NOT stabilized here: this path has
+      // exactly one consumer, so an eager materialization job would be pure
+      // overhead. One qid row per query row carries the duplicate check.
+      val qu = unitRows(queries, queryIdCol, queryVecCol, "qid", "qx")
       val flat = unitRows(corpus, idCol, vecCol, "nid", "nx")
       val scored = flat.join(broadcast(qu), "dim")
         .groupBy("qid", "nid").agg(sum(col("nx") * col("qx")).as("sim"))
-      return topK(scored, k)
+      topK(scored, k, queries = Some(queries.select(
+        col(s"`${queryIdCol.replace("`", "``")}`").as("qid"))))
+    } else {
+      val layout = ivfLayout(corpus, idCol, vecCol, nCentroids)
+      probeTopK(cellBounds(layout.cents, layout.stats), layout.cells,
+        queries, queryIdCol, queryVecCol, k)
     }
-    // corpus unit rows feed three consumers (centroid set, assignment,
-    // scoring) — an eager localCheckpoint runs the explode+norm pipeline
-    // once, truncates lineage (small downstream plans), and leaves no
-    // CacheManager entry to tax later queries' planning
-    val cu = unitRows(corpus, idCol, vecCol, "nid", "nx").transform(Checkpoints.stabilize)
-    // Lloyd refinement inside buildCentroids: mean of each cell's members
-    // per dimension, re-normalized to the unit sphere (spherical k-means).
-    // Empty cells simply drop out — their members reassign to surviving
-    // cells. Only reached for large corpora (the small-corpus flat path
-    // returned above), where refinement tightens cell radii so the angular
-    // bound prunes more cells; one iteration by default, tunable via conf.
-    // Exactness never depends on centroid quality, only probe cost does.
-    // The final centroid plan feeds several broadcast assigns/bounds and is
-    // tiny (nCentroids × dims rows) — one small materialization beats
-    // re-running the seed scan (and any refinement passes) per consumer.
-    val cents = Checkpoints.stabilize(
-      buildCentroids(corpus, idCol, cu, nCentroids))
-    val clamp: Column => Column =
-      c => greatest(lit(-1.0d), least(lit(1.0d), c))
-    // (nid, cid, csim): assignment doubles as the radius input — the
-    // cell's angular radius r is acos(min member csim), carried as
-    // (cos r, sin r) so the probe bound below never round-trips through
-    // acos/cos (whose error amplifies to ~1e-8 near |csim|≈1 and could
-    // wrongly prune a near-tie cell)
-    val cellAssign = Checkpoints.stabilize(assignCells(cents)(cu, "nid", "nx"))
-    val cellCorpus = cu.join(cellAssign.select("nid", "cid"), "nid")
-    val radii = cellAssign.groupBy("cid")
-      .agg(clamp(min(col("csim"))).as("cosr"))
-      .withColumn("sinr", sqrt(greatest(lit(0.0d),
-        lit(1.0d) - col("cosr") * col("cosr"))))
-    // every (query, cell) centroid cosine — the pruning bound needs all of
-    // them, not just the winner
-    val qCell = Checkpoints.stabilize(
-      qu.join(broadcast(cents), "dim")
-        .groupBy(col("qid"), col("cid"))
-        .agg(sum(col("qx") * col("cx")).as("qcs")))
-    // pass 1: exhaustive scores within the nearest cell set the pruning
-    // threshold t = kth-best cosine. A cell smaller than k yields t = -2,
-    // below every bound — the probe degenerates to exhaustive, still exact.
-    val w1 = Window.partitionBy("qid").orderBy(col("qcs").desc, col("cid").asc)
-    val nearest = qCell.withColumn("rn", row_number().over(w1))
-      .filter(col("rn") === 1).select("qid", "cid")
-    // stabilized: consumed by the threshold derivation AND unioned into
-    // the final ranking — one scoring of the nearest cell, not two
-    val firstScored = Checkpoints.stabilize(cellCorpus
-      .join(broadcast(qu.join(nearest, "qid")), Seq("cid", "dim"))
-      .groupBy("qid", "nid").agg(sum(col("nx") * col("qx")).as("sim")))
-    val wk = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    // left join over ALL query ids: a query whose nearest cell is
-    // memberless (possible after Lloyd reassignment) must still probe with
-    // t = -2, not vanish from the output
-    val thresholds = qCell.select("qid").distinct()
-      .join(firstScored.withColumn("rn", row_number().over(wk))
-        .groupBy("qid")
-        .agg(max(when(col("rn") === k, col("sim"))).as("tk")),
-        Seq("qid"), "left_outer")
-      .select(col("qid"), coalesce(col("tk"), lit(-2.0d)).as("t"))
-    // pass 2: probe exactly the cells whose best possible member can still
-    // beat t. The bound cos(max(0, angle(q,c) - r)) is computed by the
-    // cosine addition formula — cos(a-r) = cos a·cos r + sin a·sin r with
-    // cos a = qcs — so no acos/cos round-trip (1e-9 then safely covers
-    // plain double arithmetic error). angle ≤ r  ⟺  qcs ≥ cos r, in which
-    // case the bound is 1. The nearest cell is excluded — pass 1 already
-    // scored it exhaustively and its results union back in below (on a
-    // well-clustered corpus the nearest cell is most of the probed data;
-    // re-scoring it would nearly double the work).
-    val qcsC = clamp(col("qcs"))
-    val sinA = sqrt(greatest(lit(0.0d), lit(1.0d) - qcsC * qcsC))
-    val probe = qCell.join(broadcast(radii), "cid")
-      .join(broadcast(thresholds), "qid")
-      .filter(when(qcsC >= col("cosr"), lit(1.0d))
-        .otherwise(qcsC * col("cosr") + sinA * col("sinr")) + lit(1e-9) >=
-        col("t"))
-      .select("qid", "cid")
-      .join(nearest, Seq("qid", "cid"), "left_anti")
-    val scored = cellCorpus
-      .join(broadcast(qu.join(probe, "qid")), Seq("cid", "dim"))
-      .groupBy("qid", "nid").agg(sum(col("nx") * col("qx")).as("sim"))
-    topK(firstScored.unionAll(scored), k)
   }
 }

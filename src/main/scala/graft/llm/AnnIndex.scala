@@ -11,22 +11,23 @@ import org.apache.spark.sql.functions._
   * Layout under `indexPath`:
   *  - `centroids` — (cid, dim, cx): the coarse centroid set as unit
   *    vectors (tiny: nCentroids × dims rows);
-  *  - `cellstats` — (cid, cosr, sinr): each cell's angular radius, carried
-  *    as (cos r, sin r) so the probe bound never round-trips through
-  *    acos/cos;
+  *  - `cellstats` — (cid, cosr, sinr, cnt): each cell's angular radius,
+  *    carried as (cos r, sin r) so the probe bound never round-trips
+  *    through acos/cos, and its live member count;
   *  - `cells` — (cid, nid, uvec): every corpus vector, UNIT-normalized in
   *    double, RANGE-PARTITIONED BY `cid` — the property the whole design
   *    exists for: a query's probed cells translate to a partition-pruned
   *    scan, so at 100 TB a query batch reads only the few cells whose
   *    angular bound can still matter, straight off the manifest.
   *
-  * Queries stay EXACT with one scan of the corpus: [[probedCells]] gives
-  * each query a kth-best threshold from cell METADATA alone (angular
-  * radius and member count per cell) and keeps only the cells whose
-  * angular upper bound still reaches it — skipped cells provably hold no
-  * top-k member. The probed-cell ids are collected to literals (bounded by
-  * nCentroids — metadata-scale by construction) so partition pruning
-  * happens at scan PLANNING, not as a runtime join.
+  * The tables are [[Ann.ivfLayout]], the same layout `Ann.ivfTopK` builds
+  * in memory. Queries stay EXACT with one scan of the corpus:
+  * [[Ann.probedCells]] gives each query a kth-best threshold from cell
+  * METADATA alone (angular radius and member count per cell) and keeps
+  * only the cells whose angular upper bound still reaches it — skipped
+  * cells provably hold no top-k member. The probed-cell ids are collected
+  * to literals (bounded by nCentroids — metadata-scale by construction) so
+  * partition pruning happens at scan PLANNING, not as a runtime join.
   */
 object AnnIndex extends org.apache.spark.internal.Logging {
 
@@ -79,18 +80,9 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     readGen(norm).fold(norm)(g => s"$norm/$g")
   }
 
-  /** Reassemble each vector's unit components from its exploded rows into
-    * an array (sorted by dim; struct sort is lexicographic on (dim, nx)
-    * and dim is unique per vector; `.getField` over the struct array
-    * extracts the components without a higher-order lambda). */
-  private def unitVecArray(cu: DataFrame): DataFrame =
-    cu.groupBy("nid")
-      .agg(array_sort(collect_list(struct(col("dim"), col("nx")))).as("s"))
-      .select(col("nid"), col("s").getField("nx").as("uvec"))
-
-  /** Build (or rebuild) the index tables from `corpus`. One pass computes
-    * unit rows; centroids refine per `spark.graft.ann.ivf.kmeansIters`
-    * (default 1); assignments write range-partitioned by cell. */
+  /** Build (or rebuild) the index tables from `corpus`: [[Ann.ivfLayout]]
+    * (centroids refine per `spark.graft.ann.ivf.kmeansIters`, default 1),
+    * with the cells written range-partitioned by cell. */
   def build(
       spark: SparkSession, indexPath: String,
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -104,34 +96,21 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       spark: SparkSession, indexPath: String,
       corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, hashBucketNum: Int): Unit = {
-    val cu = Ann.unitRows(corpus, idCol, vecCol, "nid", "nx")
-      .transform(Checkpoints.stabilize)
-    val cents = Checkpoints.stabilize(
-      Ann.buildCentroids(corpus, idCol, cu, nCentroids))
-    val cellAssign = Checkpoints.stabilize(
-      Ann.assignCells(cents)(cu, "nid", "nx"))
-    val clamp: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => greatest(lit(-1.0d), least(lit(1.0d), c))
+    val layout = Ann.ivfLayout(corpus, idCol, vecCol, nCentroids)
+    layout.cents.write.format("graft").mode("overwrite")
+      .save(centroidsPath(indexPath))
     // cnt = live members per cell: with the radius it gives topK a
     // metadata-only kth-best lower bound (no cell scanned to get a
     // threshold). Probing correctness needs cnt <= true count, never the
     // reverse — build writes it exact, sync only ever DECREMENTS it.
-    val radii = cellAssign.groupBy("cid")
-      .agg(clamp(min(col("csim"))).as("cosr"), count(lit(1)).as("cnt"))
-      .withColumn("sinr", sqrt(greatest(lit(0.0d),
-        lit(1.0d) - col("cosr") * col("cosr"))))
-      .select("cid", "cosr", "sinr", "cnt")
-    val unitVec = unitVecArray(cu)
-    val cells = cellAssign.select("cid", "nid").join(unitVec, "nid")
-      .select(col("cid"), col("nid"), col("uvec"))
-    cents.write.format("graft").mode("overwrite").save(centroidsPath(indexPath))
-    radii.write.format("graft").mode("overwrite").save(statsPath(indexPath))
+    layout.stats.write.format("graft").mode("overwrite")
+      .save(statsPath(indexPath))
     // cells: RANGE-partitioned by cid (partition-pruned probes) AND
     // PK-bucketed by nid (per-vector upsert/tombstone for syncFromTable).
     // hashBucketNum is a caller choice: the creation-time guess goes stale
     // at corpus growth, and REBUCKET can fix it online — but large builds
     // should size it up front
-    cells.write.format("graft").mode("overwrite")
+    layout.cells.write.format("graft").mode("overwrite")
       .option("rangePartitions", "cid")
       .option("hashPartitions", "nid")
       .option("hashBucketNum", hashBucketNum.toString)
@@ -140,7 +119,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     // which SINGLE cell holds a touched vector's old row, so re-assignment
     // tombstones exactly one (cid, nid) instead of fanning out to every
     // cell. Tiny next to cells (two longs/row vs a full unit vector).
-    cellAssign.select(col("nid"), col("cid")).write.format("graft")
+    layout.assign.select(col("nid"), col("cid")).write.format("graft")
       .mode("overwrite")
       .option("hashPartitions", "nid")
       .option("hashBucketNum", hashBucketNum.toString)
@@ -230,11 +209,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
         val live = corpusNow.join(broadcast(touched), Seq(idCol), "left_semi")
         val cu = Ann.unitRows(live, idCol, vecCol, "nid", "nx")
           .transform(Checkpoints.stabilize)
-        val assignNew = Checkpoints.stabilize(
-          Ann.assignCells(cents)(cu, "nid", "nx"))
-        val unitVec = unitVecArray(cu)
-        val newRows = assignNew.select("cid", "nid").join(unitVec, "nid")
-          .select(col("cid"), col("nid"), col("uvec"))
+        val (assignNew, newRows) = Ann.assignAndFold(cents, cu)
         // the assign table names each touched id's ONE previous cell: a
         // bucketed semi-join on the (tiny, PK-nid) assign table, never a
         // cells-table scan. Tombstone exactly that (cid, nid) when the id
@@ -271,9 +246,8 @@ object AnnIndex extends org.apache.spark.internal.Logging {
         // Grow-only fold of the new members' csims into the stored stats
         // (tiny table — full overwrite is the honest cost).
         val stored = spark.read.format("graft").load(statsPath(root))
-        val grown = assignNew.groupBy("cid")
-          .agg(greatest(lit(-1.0d), least(lit(1.0d), min(col("csim"))))
-            .as("newCosr"))
+        val grown = Ann.cellStats(assignNew)
+          .select(col("cid"), col("cosr").as("newCosr"))
         // cnt fold mirrors the radii's conservatism, in the direction that
         // keeps the METADATA THRESHOLD valid: cnt must never exceed the
         // cell's true live membership, so sync only DECREMENTS (members
@@ -288,17 +262,14 @@ object AnnIndex extends org.apache.spark.internal.Logging {
         // receives its first member now must enter the stats — an inner or
         // left fold would hide it from the probe's stats and silently
         // break exactness
-        val folded = stored.join(grown, Seq("cid"), "full_outer")
+        val folded = Ann.withSinr(stored.join(grown, Seq("cid"), "full_outer")
           .join(losses, Seq("cid"), "left_outer")
           .select(col("cid"),
             least(coalesce(col("cosr"), col("newCosr")),
               coalesce(col("newCosr"), col("cosr"))).as("cosr"),
             greatest(lit(0L),
               coalesce(col("cnt"), lit(0L)) - coalesce(col("loss"), lit(0L)))
-              .as("cnt"))
-          .withColumn("sinr", sqrt(greatest(lit(0.0d),
-            lit(1.0d) - col("cosr") * col("cosr"))))
-          .select("cid", "cosr", "sinr", "cnt")
+              .as("cnt")))
           .transform(Checkpoints.stabilize)
         folded.write.format("graft").mode("overwrite")
           .save(statsPath(root))
@@ -557,16 +528,12 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       spark: SparkSession, indexPath: String, cents: DataFrame,
       touchedCids: Seq[Any]): Unit = {
     if (touchedCids.isEmpty) return
-    val clamp: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => greatest(lit(-1.0d), least(lit(1.0d), c))
-    val live = spark.read.format("graft").load(cellsPath(indexPath))
+    val live = Ann.cellStats(spark.read.format("graft").load(cellsPath(indexPath))
       .filter(col("cid").isin(touchedCids: _*))
       .select(col("cid"), col("nid"), posexplode(col("uvec"))
         .as(Seq("dim", "nx")))
       .join(broadcast(cents), Seq("cid", "dim"))
-      .groupBy("cid", "nid").agg(sum(col("nx") * col("cx")).as("csim"))
-      .groupBy("cid")
-      .agg(clamp(min(col("csim"))).as("cosr"), count(lit(1)).as("cnt"))
+      .groupBy("cid", "nid").agg(sum(col("nx") * col("cx")).as("csim")))
     val touchedDf = spark.createDataFrame(
       java.util.Arrays.asList(touchedCids.map(c =>
         org.apache.spark.sql.Row(c)): _*),
@@ -574,29 +541,12 @@ object AnnIndex extends org.apache.spark.internal.Logging {
         .StructField("cid", live.schema("cid").dataType))))
     val exact = touchedDf.join(live, Seq("cid"), "left_outer")
       .select(col("cid"), coalesce(col("cosr"), lit(1.0d)).as("cosr"),
+        coalesce(col("sinr"), lit(0.0d)).as("sinr"),
         coalesce(col("cnt"), lit(0L)).as("cnt"))
-      .withColumn("sinr", sqrt(greatest(lit(0.0d),
-        lit(1.0d) - col("cosr") * col("cosr"))))
-      .select("cid", "cosr", "sinr", "cnt")
     val untouched = spark.read.format("graft").load(statsPath(indexPath))
       .filter(!col("cid").isin(touchedCids: _*))
     untouched.unionByName(exact).transform(Checkpoints.stabilize)
       .write.format("graft").mode("overwrite").save(statsPath(indexPath))
-  }
-
-  /** One cell's inputs to the probe bound: its centroid's unit components
-    * (`dims` ascending, `cx` aligned with them) and its stats — the angular
-    * radius as (cos r, sin r) and the live member count `cnt`. */
-  private[llm] final case class CellBound(
-      cid: Any, dims: Array[Int], cx: Array[Double],
-      cosr: Double, sinr: Double, cnt: Long)
-
-  /** Every indexed cell's [[CellBound]], plus the cid column's type. */
-  private final case class CellBounds(
-      cells: Array[CellBound], cidType: org.apache.spark.sql.types.DataType) {
-    /** Vector length the centroids cover. */
-    def dims: Int =
-      cells.foldLeft(0)((m, c) => math.max(m, c.dims.lastOption.fold(0)(_ + 1)))
   }
 
   // Centroids and stats are metadata-scale BY CONSTRUCTION (nCentroids
@@ -607,10 +557,10 @@ object AnnIndex extends org.apache.spark.internal.Logging {
   // carries the generation root it was read from, so a swap invalidates
   // even if the new generation's table versions coincide with the old.
   private val boundsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long, Long, CellBounds)]()
+    String, (String, Long, Long, Ann.CellBounds)]()
 
   private def cellBounds(
-      spark: SparkSession, normIdx: String, root: String): CellBounds = {
+      spark: SparkSession, normIdx: String, root: String): Ann.CellBounds = {
     import graft.meta.SnapshotManagement
     val cv = SnapshotManagement
       .snapshot(SnapshotManagement.normalize(centroidsPath(root))).version
@@ -619,81 +569,12 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     boundsCache.get(normIdx) match {
       case (croot, ccv, crv, b) if croot == root && ccv == cv && crv == rv => b
       case _ =>
-        val cents = spark.read.format("graft").load(centroidsPath(root))
-        val stats = spark.read.format("graft").load(statsPath(root))
-        // a cell without a stats row (or pre-cnt stats) gets the widest
-        // radius and claims no members: it is always probed and never
-        // tightens the threshold — conservative costs a scan, the
-        // alternative costs exactness
-        val statsBy = stats.collect().map { r =>
-          def num(f: String): Option[Number] =
-            if (!stats.columns.contains(f) || r.isNullAt(r.fieldIndex(f))) None
-            else Some(r.getAs[Number](f))
-          r.getAs[Any]("cid") -> ((num("cosr").fold(-1.0)(_.doubleValue),
-            num("sinr").fold(0.0)(_.doubleValue), num("cnt").fold(0L)(_.longValue)))
-        }.toMap
-        val cells = cents.collect()
-          .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-          .groupBy(_.get(0)).iterator.map { case (cid, rs) =>
-            val comps = rs.map(r => (r.getInt(1), r.getDouble(2))).sortBy(_._1)
-            val (cosr, sinr, cnt) = statsBy.getOrElse(cid, (-1.0, 0.0, 0L))
-            CellBound(cid, comps.map(_._1), comps.map(_._2), cosr, sinr, cnt)
-          }.toArray
-        val b = CellBounds(cells, cents.schema("cid").dataType)
+        val b = Ann.cellBounds(
+          spark.read.format("graft").load(centroidsPath(root)),
+          spark.read.format("graft").load(statsPath(root)))
         boundsCache.put(normIdx, (root, cv, rv, b))
         b
     }
-  }
-
-  /** The cells query vector `qv` must scan for an exact top-`k`; empty for
-    * a null or zero-norm query (cosine undefined — it returns no rows, as
-    * everywhere in the ANN family).
-    *
-    * With a = angle(q, centroid) and r = the cell's radius, every member's
-    * cosine to q lies in [cos(a+r), cos(a-r)], expanded by the angle-sum
-    * identities on the stored (cos r, sin r) — no acos anywhere. Clamps: a+r
-    * past pi floors the interval at -1, a-r below 0 caps it at 1. Walking
-    * the cells in lower-bound-descending order until their member counts
-    * reach k proves "at least k members score >= t0"; a cell whose upper
-    * bound misses t0 then provably holds no top-k member. Fewer than k
-    * counted members gives t0 = -2: probe everything. cnt is maintained
-    * conservatively low by sync, which only ever weakens t0. The margin on
-    * ub absorbs double rounding, so the bound can only probe an extra cell,
-    * never skip a required one. */
-  private[llm] def probedCells(
-      cells: Array[CellBound], qv: scala.collection.Seq[Any], k: Int): Seq[Any] = {
-    if (qv == null) return Nil
-    // (cid, ub, lb, cnt) per cell; the norm runs over the centroid's dims
-    val bounds = cells.flatMap { c =>
-      var dot = 0.0
-      var norm2 = 0.0
-      var i = 0
-      while (i < c.dims.length) {
-        val d = c.dims(i)
-        if (d >= 0 && d < qv.length && qv(d) != null) {
-          val x = qv(d).asInstanceOf[Double]
-          dot += x * c.cx(i)
-          norm2 += x * x
-        }
-        i += 1
-      }
-      if (norm2 <= 0.0) None
-      else {
-        val qcs = math.max(-1.0, math.min(1.0, dot / math.sqrt(norm2)))
-        val sinA = math.sqrt(math.max(0.0, 1.0 - qcs * qcs))
-        val ub = if (qcs >= c.cosr) 1.0 else qcs * c.cosr + sinA * c.sinr
-        val lb = if (qcs < -c.cosr) -1.0 else qcs * c.cosr - sinA * c.sinr
-        Some((c.cid, ub, lb, c.cnt))
-      }
-    }
-    // lb ties share a value, so tie order cannot change t0
-    var cum = 0L
-    var t0 = -2.0
-    bounds.sortBy(-_._3).foreach { case (_, _, lb, cnt) =>
-      cum += cnt
-      if (t0 == -2.0 && cum >= k) t0 = lb
-    }
-    bounds.toSeq.collect { case (cid, ub, _, _) if ub + 1e-9 >= t0 => cid }
   }
 
   /** Exact cosine top-k of `queries` against the indexed corpus. Output
@@ -703,22 +584,9 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * family). Query ids must be unique per call: a qid given twice fails
     * the query with an error naming it.
     *
-    * One plan at every batch size:
-    *  1. each query row gets its probed cells from [[probedCells]], run on
-    *     the executors over a broadcast of the cached [[CellBound]]s — the
-    *     threshold comes from metadata alone, so the corpus is touched once
-    *     and planning collects no query vector to the driver;
-    *  2. the (qid, qv, probe) frame is stabilized lazily, so the one
-    *     planning action — pair counts per probed cid, at most nCentroids
-    *     rows — also runs the caller's query subtree, exactly once. Its cids
-    *     become `isin` literals that partition-prune the cells scan at
-    *     PLANNING; its pair count decides whether the (qid, qv, cid) side
-    *     fits `spark.sql.autoBroadcastJoinThreshold`;
-    *  3. the probed cells join their queries on cid and score per document
-    *     with [[Ann.pairDot]] on the raw query vector: |q|·cos ranks as the
-    *     cosine does, with the same ties;
-    *  4. [[Ann.topK]]'s window ranks, and checks in the same partitions that
-    *     each qid came from one query row. */
+    * [[Ann.probeTopK]] plans it from the cached [[Ann.CellBound]]s over the
+    * `cells` table: the probed cids become `isin` literals that
+    * partition-prune the cells scan at PLANNING. */
   def topK(
       spark: SparkSession, indexPath: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
@@ -727,37 +595,9 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     // leaves this call on one coherent generation (kept on disk through
     // the next rebuild)
     val root = tableRoot(indexPath)
-    val meta = cellBounds(spark,
-      graft.meta.SnapshotManagement.normalize(indexPath), root)
-    val bc = spark.sparkContext.broadcast(meta.cells)
-    val probe = udf(new org.apache.spark.sql.api.java.UDF1[
-        scala.collection.Seq[Any], Seq[Any]] {
-      def call(qv: scala.collection.Seq[Any]): Seq[Any] =
-        probedCells(bc.value, qv, k)
-    }, org.apache.spark.sql.types.ArrayType(meta.cidType))
-    val q = queries
-      .select(col(s"`$queryIdCol`").as("qid"),
-        col(s"`$queryVecCol`").cast("array<double>").as("qv"))
-      .select(col("qid"), col("qv"), probe(col("qv")).as("probe"))
-      .transform(Checkpoints.stabilize(_, eager = false))
-    // the one planning action: an RDD aggregate is a single job with no
-    // shuffle stage, and it fills the stabilized frame's blocks on the way
-    val cidCounts = q.select(explode(col("probe"))).rdd
-      .aggregate(Map.empty[Any, Long])(
-        (m, r) => m.updated(r.get(0), m.getOrElse(r.get(0), 0L) + 1L),
-        (a, b) => b.foldLeft(a) { case (m, (c, n)) =>
-          m.updated(c, m.getOrElse(c, 0L) + n) })
-    val pairs =
-      q.select(col("qid"), col("qv"), explode(col("probe")).as("cid"))
-    val fits = cidCounts.values.sum.toDouble * meta.dims * 8 <=
-      org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
-        .sessionState.conf.autoBroadcastJoinThreshold
-    val scored = spark.read.format("graft").load(cellsPath(root))
-      .filter(if (cidCounts.isEmpty) lit(false)
-        else col("cid").isin(cidCounts.keys.toSeq: _*))
-      .join(if (fits) broadcast(pairs) else pairs, "cid")
-      .select(col("qid"), col("nid"),
-        Ann.pairDot(col("qv"), col("uvec"), meta.dims).as("sim"))
-    Ann.topK(scored, k, queries = Some(q))
+    Ann.probeTopK(
+      cellBounds(spark, graft.meta.SnapshotManagement.normalize(indexPath), root),
+      spark.read.format("graft").load(cellsPath(root)),
+      queries, queryIdCol, queryVecCol, k)
   }
 }

@@ -787,21 +787,21 @@ object Dedup extends org.apache.spark.internal.Logging {
     (maxSize, oversized, pairWork)
   }
 
-  /** Conf key for the pair producers' work-gated fan-out threshold, in
-    * estimated dot-product TERMS (pairWork × dims). Below it the pair
-    * frame keeps its exchange-free layout (a small corpus's whole pair
-    * stage is cheaper than one extra shuffle + its tasks — measured
-    * neutral-to-worse ungated in a past round); above it the frame is
-    * repartitioned to the default parallelism so the quadratic stage never
-    * runs on a handful of post-AQE-coalesce partitions. At production
-    * scale the frame plans ≥ cores partitions and the underlying
-    * [[Parallelism.fanOut]] floor is a structural no-op. */
-  val PAIR_FANOUT_TERMS_KEY = "spark.graft.dedup.pair.fanOutMinTerms"
+  /** The pair producers' work-gated fan-out threshold, in estimated
+    * dot-product TERMS (pairWork × dims): 128M terms ≈ seconds of
+    * single-core dot-product work. Below it the pair frame keeps its
+    * exchange-free layout (a small corpus's whole pair stage is cheaper
+    * than one extra shuffle + its tasks — measured neutral-to-worse
+    * ungated in a past round); above it the frame is repartitioned to the
+    * default parallelism so the quadratic stage never runs on a handful of
+    * post-AQE-coalesce partitions. At production scale the frame plans
+    * ≥ cores partitions and the underlying [[Parallelism.fanOut]] floor is
+    * a structural no-op. A constant: no caller needs another value. */
+  private val PAIR_FANOUT_TERMS = 128L << 20
 
   /** Work-gated parallelism floor for a stabilized pair frame: fan out by
     * the UNIQUE id only when the probe-estimated pair work (`pairWork`
-    * partner rows × `dims` terms each) exceeds [[PAIR_FANOUT_TERMS_KEY]]
-    * (default 128M terms ≈ seconds of single-core dot-product work).
+    * partner rows × `dims` terms each) exceeds [[PAIR_FANOUT_TERMS]].
     *
     * By the unique id, NOT the join keys, deliberately: a group key's
     * whole quadratic workload lands in one partition (AQE's skew split
@@ -811,14 +811,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     * own exchange (or broadcast) takes it from there. */
   private def pairFan(
       df: DataFrame, idCol: String, pairWork: Long,
-      dims: Int): DataFrame = {
-    val minTerms = df.sparkSession.conf
-      .getOption(PAIR_FANOUT_TERMS_KEY).map(_.toLong)
-      .getOrElse(128L << 20)
-    if (pairWork * math.max(1, dims) > minTerms)
+      dims: Int): DataFrame =
+    if (pairWork * math.max(1, dims) > PAIR_FANOUT_TERMS)
       Parallelism.fanOut(df, idCol)
     else df
-  }
 
   /** Hyperplane sign sub-buckets over each member's RESIDUAL
     * r = x − (x·c)c, the component orthogonal to its group's center.

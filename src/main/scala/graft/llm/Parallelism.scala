@@ -53,26 +53,23 @@ object Parallelism {
   def fanOut(df: DataFrame, keyCol: String): DataFrame =
     fanOutKeys(df, Seq(keyCol))
 
-  /** Conf key for [[fanOutBytes]]'s threshold (bytes per planned split). */
-  val FANOUT_MIN_BYTES_KEY = "spark.graft.text.fanOutMinBytesPerSplit"
+  /** [[fanOutBytes]]'s threshold in bytes per planned split. A constant:
+    * no caller needs another value. */
+  private val FANOUT_MIN_BYTES = 512L << 10
 
   /** Byte-gated floor for MODERATE per-row compute (token-count
     * aggregates): the flat floor was measured HARMFUL on these at small
     * scale — one hash-agg update per exploded token doesn't amortize the
     * extra exchange — but the balance flips once each split carries
     * enough text. Fires only when the plan-time input size exceeds
-    * `minBytesPerSplit` (conf [[FANOUT_MIN_BYTES_KEY]], default 512 KB)
-    * per planned split. Heavy per-row stages (regex + shingle assembly)
-    * keep the unconditional [[fanOut]]. */
+    * [[FANOUT_MIN_BYTES]] (512 KB) per planned split. Heavy per-row
+    * stages (regex + shingle assembly) keep the unconditional [[fanOut]]. */
   def fanOutBytes(df: DataFrame, keyCol: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val minBytes = df.sparkSession.conf
-      .getOption(FANOUT_MIN_BYTES_KEY).map(_.toLong)
-      .getOrElse(512L << 10)
     plannedSplits(df) match {
       case Some(parts) if parts < target &&
           castToImpl(df).queryExecution.optimizedPlan.stats.sizeInBytes >
-            BigInt(minBytes) * parts =>
+            BigInt(FANOUT_MIN_BYTES) * parts =>
         df.repartition(target, col(s"`${keyCol.replace("`", "``")}`"))
       case _ => df
     }

@@ -290,6 +290,42 @@ class LlmOperatorsSuite extends GraftFunSuite {
     assert(r2 == 1.0, s"bound-pruned IVF must be exact after Lloyd: $r2")
   }
 
+  test("IVF pruned path probes fewer than nCentroids cells per query") {
+    // four tight, mutually-orthogonal clusters, cluster = id % 4, so the
+    // first-N-by-id seeds land one per cluster. Exactness alone would also
+    // pass with bounds that probe every cell; this pins the pruning. Each
+    // call's queries share one cluster, so the cells filter's isin literals
+    // (the union of the batch's probed cells) bound every query's probe.
+    val rnd2 = new scala.util.Random(13)
+    val nCentroids = 4
+    val vecs = (0 until 80).map { i =>
+      (i.toLong, Array.tabulate(16)(d =>
+        (if (d / 4 == i % nCentroids) 1f else 0f) +
+          rnd2.nextFloat() * 0.1f - 0.05f))
+    }
+    val df = vecs.toDF("vec_id", "embedding")
+    spark.conf.set("spark.graft.ann.ivf.smallCorpusBytes", "0")
+    try (0 until nCentroids).foreach { c =>
+      val queries = df.filter(col("vec_id") % nCentroids === c &&
+        col("vec_id") < 24)
+      val got = Ann.ivfTopK(df, "vec_id", "embedding",
+        queries, "vec_id", "embedding", k = 5, nCentroids = nCentroids)
+      val probed = got.queryExecution.analyzed.flatMap(_.expressions)
+        .flatMap(_.collect {
+          case org.apache.spark.sql.catalyst.expressions.In(
+              a: org.apache.spark.sql.catalyst.expressions.Attribute, lits)
+              if a.name == "cid" => lits
+        }).flatten.distinct
+      info(s"cluster $c: 6 queries probe ${probed.size} of $nCentroids cells")
+      assert(probed.nonEmpty && probed.size < nCentroids,
+        s"cluster $c's queries probed $probed")
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select("qid", "rank", "nid").as[(Long, Int, Long)].collect().toSet
+      assert(rows(got) == rows(Ann.bruteTopK(df, "vec_id", "embedding",
+        queries, "vec_id", "embedding", k = 5)))
+    } finally spark.conf.unset("spark.graft.ann.ivf.smallCorpusBytes")
+  }
+
   test("language id picks the stopword-dominant language deterministically") {
     val df = Seq(
       (1L, "the cat and the dog is of to the house"),
@@ -1172,11 +1208,22 @@ class LlmOperatorsSuite extends GraftFunSuite {
     AnnIndex.build(spark, idx, emb, "vec_id", "embedding", nCentroids = 4)
     // identical copies at k = 1: only one copy's row can win the rank
     val queries = emb.filter($"vec_id" < 3).union(emb.filter($"vec_id" === 1L))
-    val e = intercept[Exception](AnnIndex.topK(spark, idx, queries,
+    def failsNamingQid1(run: => Unit): Unit = {
+      val e = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("duplicate query id 1"), msgs)
+    }
+    failsNamingQid1(AnnIndex.topK(spark, idx, queries,
       "vec_id", "embedding", k = 1).collect())
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
-      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-    assert(msgs.contains("duplicate query id 1"), msgs)
+    // Ann.ivfTopK keeps the same contract on its flat (small frame) and
+    // pruned paths
+    def ivf(): Unit = Ann.ivfTopK(emb, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 1, nCentroids = 4).collect()
+    failsNamingQid1(ivf())
+    spark.conf.set("spark.graft.ann.ivf.smallCorpusBytes", "0")
+    try failsNamingQid1(ivf())
+    finally spark.conf.unset("spark.graft.ann.ivf.smallCorpusBytes")
   }
 
   test("AnnIndex.syncFromTable: index follows the corpus table's feed and " +
