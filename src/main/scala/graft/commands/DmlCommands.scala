@@ -906,10 +906,10 @@ object CleanupCommand {
   /** Retention floor: below this an in-flight write (files land in the
     * table layout BEFORE the metadata commit) could be vacuumed away. */
   val MIN_RETAIN_MILLIS: Long = 3600 * 1000L
-  /** Default delete-phase lease (conf `spark.graft.cleanup.leaseMillis`). */
-  val DEFAULT_LEASE_MILLIS: Long = 15L * 60 * 1000
-  /** Leases never exceed this; also bounds the lease-scan horizon. */
-  val MAX_LEASE_MILLIS: Long = 24L * 3600 * 1000
+  /** Delete-phase lease of a vacuum. */
+  private val LEASE_MILLIS: Long = 15L * 60 * 1000
+  /** Lease-scan horizon: commits older than this hold no live lease. */
+  private val MAX_LEASE_MILLIS: Long = 24L * 3600 * 1000
 
   /** The open, unexpired vacuum lease at or below `fromVersion`, if any:
     * (markerVersion, leaseUntil). Scans DOWN from `fromVersion` and stops
@@ -954,9 +954,6 @@ object CleanupCommand {
       return sweep(spark, path, SnapshotManagement.snapshot(path),
         retainMillis, dryRun = true)
     }
-    val leaseMillis = math.min(MAX_LEASE_MILLIS,
-      spark.conf.getOption("spark.graft.cleanup.leaseMillis")
-        .map(_.toLong).getOrElse(DEFAULT_LEASE_MILLIS))
     SnapshotManagement.withRewriteTransaction(path) { txn =>
       val snapshot = txn.snapshotOpt.getOrElse(
         throw new GraftTableNotFoundException(path))
@@ -978,7 +975,7 @@ object CleanupCommand {
       // state
       txn.commit("vacuum", None, Nil, Nil,
         strictWindow = true,
-        leaseUntil = System.currentTimeMillis() + leaseMillis)
+        leaseUntil = System.currentTimeMillis() + LEASE_MILLIS)
       try sweep(spark, path, snapshot, retainMillis, dryRun = false)
       finally SnapshotManagement.withNewTransaction(path)(
         _.commit("vacuum_end", None, Nil, Nil))

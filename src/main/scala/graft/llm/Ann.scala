@@ -142,19 +142,19 @@ object Ann {
     expl.join(keyed.filter(col("n") =!= 0.0d), idAs).select(outCols: _*)
   }
 
-  /** Fold unit-normalized EXPLODED rows (id, dim, x) back into one
-    * `array<double>` per id, ordered by dim — for exploded rows that are
+  /** Fold unit-normalized EXPLODED rows (keys, dim, x) back into one
+    * `array<double>` per key tuple, ordered by dim — for exploded rows that are
     * ALREADY checkpointed because centroid assignment needs them anyway
     * (the semantic pair path, the IVF cells of [[assignAndFold]]): one
     * codegen'd collect_list aggregate over the checkpoint, no lambda
     * anywhere (struct sort is lexicographic on (dim, x) and dim is unique
-    * per id; `.getField` extracts the components). Values are
+    * per key tuple; `.getField` extracts the components). Values are
     * bit-identical to the exploded ones — no re-normalization. */
   private[llm] def foldUnitVectors(
-      rows: DataFrame, id: String, x: String, vAs: String): DataFrame =
-    rows.groupBy(id)
+      rows: DataFrame, x: String, vAs: String, keys: String*): DataFrame =
+    rows.groupBy(keys.map(col): _*)
       .agg(array_sort(collect_list(struct(col("dim"), col(x)))).as("__s"))
-      .select(col(id), col("__s").getField(x).as(vAs))
+      .select(keys.map(col) :+ col("__s").getField(x).as(vAs): _*)
 
   /** Pairwise dot product of two unit-vector array columns — the per-PAIR
     * expression of the near-dup pair joins, replacing the per-dimension
@@ -249,7 +249,7 @@ object Ann {
     * [[cellStats]]. Zero-norm vectors are dropped by [[unitRows]]. */
   private[llm] def ivfLayout(
       corpus: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int): IvfLayout = {
+      nCentroids: Int, foldAfterJoin: Boolean = false): IvfLayout = {
     // corpus unit rows feed three consumers (centroid set, assignment,
     // cell fold) — an eager localCheckpoint runs the explode+norm pipeline
     // once, truncates lineage (small downstream plans), and leaves no
@@ -261,21 +261,27 @@ object Ann {
     // re-running the seed scan (and any refinement passes) per consumer
     val cents = Checkpoints.stabilize(
       buildCentroids(corpus, idCol, cu, nCentroids))
-    val (assign, cells) = assignAndFold(cents, cu)
+    val (assign, cells) = assignAndFold(cents, cu, foldAfterJoin)
     IvfLayout(cents, assign, cellStats(assign), cells)
   }
 
   /** Assign unit rows `cu` (nid, dim, nx) to their nearest centroid and fold
     * each vector's components into one `uvec` array: (assignments (nid,
     * cid, csim), stabilized for the stats and the cells; cells (cid, nid,
-    * uvec)). */
+    * uvec)). By default each vector folds once, before the join — the
+    * form the index tables are written in. With `foldAfterJoin` the fold
+    * groups the joined rows by (cid, nid), so a `cid` filter on the cells
+    * (the probe's) reaches below it and only probed cells' vectors fold. */
   private[llm] def assignAndFold(
-      cents: DataFrame, cu: DataFrame): (DataFrame, DataFrame) = {
+      cents: DataFrame, cu: DataFrame,
+      foldAfterJoin: Boolean = false): (DataFrame, DataFrame) = {
     val assign = Checkpoints.stabilize(assignCells(cents)(cu, "nid", "nx"))
-    val cells = assign.select("cid", "nid")
-      .join(foldUnitVectors(cu, "nid", "nx", "uvec"), "nid")
-      .select(col("cid"), col("nid"), col("uvec"))
-    (assign, cells)
+    val members = assign.select("cid", "nid")
+    val cells =
+      if (foldAfterJoin)
+        foldUnitVectors(members.join(cu, "nid"), "nx", "uvec", "cid", "nid")
+      else members.join(foldUnitVectors(cu, "nx", "uvec", "nid"), "nid")
+    (assign, cells.select("cid", "nid", "uvec"))
   }
 
   /** Cell stats (cid, cosr, sinr, cnt) of member rows (cid, csim): the
@@ -556,7 +562,8 @@ object Ann {
       topK(scored, k, queries = Some(queries.select(
         col(s"`${queryIdCol.replace("`", "``")}`").as("qid"))))
     } else {
-      val layout = ivfLayout(corpus, idCol, vecCol, nCentroids)
+      val layout = ivfLayout(corpus, idCol, vecCol, nCentroids,
+        foldAfterJoin = true)
       probeTopK(cellBounds(layout.cents, layout.stats), layout.cells,
         queries, queryIdCol, queryVecCol, k)
     }

@@ -627,7 +627,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // from the ALREADY-CHECKPOINTED exploded rows (codegen'd collect_list
     // — components bit-identical to cu's; an inline narrow unitVecs here
     // would drag its CodegenFallback folds into the join stage)
-    val uv = Ann.foldUnitVectors(cu, "nid", "nx", "varr")
+    val uv = Ann.foldUnitVectors(cu, "nx", "varr", "nid")
     val au = uv.join(assignKeyed, "nid").transform(Checkpoints.stabilize)
     val pf = pairFan(au, "nid", pairWork, dims)
     pf.as("a").join(pf.as("b"),

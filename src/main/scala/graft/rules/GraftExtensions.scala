@@ -3,8 +3,8 @@ package graft.rules
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -94,16 +94,23 @@ case class TagWriteAlignment(spark: SparkSession)
 /** Declares what the storage layout guarantees so Catalyst can elide
   * exchanges and sorts (reference `SetPartitionAndOrdering.scala:34-165`).
   *
-  * A `GraftPkScan` always produces exactly `bucketNum` partitions where
+  * An unpruned `GraftPkScan` produces exactly `bucketNum` partitions where
   * partition k contains precisely the rows with
   * `pmod(hash(pk), bucketNum) == k` — the write path repartitioned by the
   * same expression Spark's `HashPartitioning.partitionIdExpression` uses.
   * So a join or aggregation keyed on the PK needs NO shuffle: this rule
   * runs after planning, before `EnsureRequirements`, and wraps the scan in
-  * a node declaring `HashPartitioning(pk, bucketNum)`; when the scanned
-  * data is a single range partition the PK sort order of the files (or of
-  * the merge reader's output) is declared too, letting sort-merge join skip
-  * its sorts.
+  * a node declaring `HashPartitioning(pk, bucketNum)`. A scan whose keys
+  * pin one bucket plans one partition and declares `SinglePartition`; one
+  * pinned to several buckets declares nothing. When the scanned data is a
+  * single range partition the PK sort order of the files (or of the merge
+  * reader's output) is declared too, letting sort-merge join skip its
+  * sorts.
+  *
+  * `HashPartitioning` must never be declared on a scan whose partition
+  * index is not its bucket id: `EnsureRequirements` then drops the
+  * `repartition(bucketNum, pk)` of a PK write fed by the scan, and the
+  * commit protocol takes each file's bucket from its task's partition id.
   */
 case class DeclareBucketDistribution(spark: SparkSession) extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
@@ -111,15 +118,16 @@ case class DeclareBucketDistribution(spark: SparkSession) extends Rule[SparkPlan
       val pk = scan.scan.asInstanceOf[GraftPkScan]
       val byName = scan.output.map(a => a.name -> a).toMap
       val pkAttrs = pk.tableInfo.hashColumns.flatMap(byName.get)
-      if (pkAttrs.length != pk.tableInfo.hashColumns.length) scan
-      else {
-        val partitioning = HashPartitioning(pkAttrs, pk.tableInfo.bucketNum)
-        val singleRange = pk.files.map(_.rangeKey).distinct.length <= 1
-        val ordering =
-          if (singleRange) pkAttrs.map(a => SortOrder(a, org.apache.spark.sql
-            .catalyst.expressions.Ascending, Seq.empty))
-          else Nil
-        GraftClusteredExec(scan, partitioning, ordering)
+      val allPk = pkAttrs.length == pk.tableInfo.hashColumns.length
+      val ordering =
+        if (allPk && pk.files.map(_.rangeKey).distinct.length <= 1)
+          pkAttrs.map(a => SortOrder(a, Ascending, Seq.empty))
+        else Nil
+      pk.plannedBuckets.map(_.size) match {
+        case None if allPk => GraftClusteredExec(scan,
+          HashPartitioning(pkAttrs, pk.tableInfo.bucketNum), ordering)
+        case Some(1) => GraftClusteredExec(scan, SinglePartition, ordering)
+        case _ => scan
       }
   }
 }

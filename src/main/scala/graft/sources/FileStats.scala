@@ -41,9 +41,8 @@ object FileStats {
   val MAX_STRING_STATS_LEN = 96
 
   /** Stats are collected for at most this many leading data columns
-    * (`spark.graft.stats.maxCols` overrides; Delta's
-    * dataSkippingNumIndexedCols analog). */
-  val DEFAULT_MAX_COLS = 32
+    * (Delta's dataSkippingNumIndexedCols analog). */
+  private val MAX_COLS = 32
 
   // ------------------------------------------------------------------
   // collection (write/commit path)
@@ -60,8 +59,7 @@ object FileStats {
   def collect(
       file: org.apache.hadoop.fs.Path,
       conf: Configuration,
-      schema: StructType,
-      maxCols: Int = DEFAULT_MAX_COLS):
+      schema: StructType):
       (Long, Map[String, String], Map[String, String], Map[String, Long]) = {
     if (org.apache.spark.TaskContext.get() == null) driverReads.incrementAndGet()
     try {
@@ -69,7 +67,7 @@ object FileStats {
       try {
         val blocks = reader.getFooter.getBlocks.asScala
         val numRecords = blocks.map(_.getRowCount).sum
-        val indexed = schema.fields.take(maxCols)
+        val indexed = schema.fields.take(MAX_COLS)
           .filter(f => encodable(f.dataType)).map(f => f.name -> f.dataType)
         val mins = Map.newBuilder[String, String]
         val maxs = Map.newBuilder[String, String]

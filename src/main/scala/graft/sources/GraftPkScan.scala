@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, Murmur3Hash, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.connector.read._
@@ -67,11 +67,18 @@ class GraftBucketScanBuilder(
     val mergeOps = Option(options.get(GraftMergeOperator.SCAN_OPTION))
       .map(GraftMergeOperator.parseAssignments)
       .getOrElse(GraftMergeOperator.declaredOperators(ti))
-    GraftPkScan(spark, tablePath, ti, pruned, readDataSchema(),
-      readPartitionSchema(), pushedDataFilters.toSeq, mergeOps,
+    // bucket pruning: equality / IN conjuncts on every hash column pin the
+    // buckets their keys hash to; the scan plans only those (a pin that
+    // covers every bucket is no pin)
+    val pinned = GraftPkScan.pinnedBuckets(ti, pushedDataFilters.toSeq)
+      .filter(_.size < ti.bucketNum).map(_.toSeq.sorted)
+    GraftPkScan(spark, tablePath, ti,
+      pinned.fold(pruned)(bs => pruned.filter(f => bs.contains(f.bucket))),
+      readDataSchema(), readPartitionSchema(), pushedDataFilters.toSeq, mergeOps,
       streamIgnoreChanges =
         Option(options.get("ignoreChanges")).exists(_.toBoolean),
-      streamOptions = options.asCaseSensitiveMap().asScala.toMap)
+      streamOptions = options.asCaseSensitiveMap().asScala.toMap,
+      plannedBuckets = pinned)
   }
 }
 
@@ -86,23 +93,28 @@ case class GraftFileDesc(
     isBase: Boolean,
     hasCols: Array[Boolean]) // per merged-layout field
 
-/** One Spark partition == one bucket (files unsplittable, reference
+/** One Spark partition == one planned bucket (files unsplittable, reference
   * `BucketParquetScan.scala:157-170` / `MergeParquetScan.scala:382-431`).
-  * `groups` holds the bucket's file groups, one per surviving range
-  * partition; rows within a group merge-read PK-sorted.
+  * `bucket` is the bucket id, which equals the partition index only when
+  * the scan plans every bucket. `groups` holds the bucket's file groups,
+  * one per surviving range partition; rows within a group merge-read
+  * PK-sorted.
   */
 case class GraftPkInputPartition(bucket: Int, groups: Array[GraftFileGroup])
   extends InputPartition
 
 /** Physical scan of a PK table.
   *
-  * Always plans exactly `bucketNum` partitions, partition k holding bucket
+  * Plans one partition per bucket in `plannedBuckets`, in bucket order;
+  * `None` plans all `bucketNum` buckets. Unpruned, partition k holds bucket
   * k's files — the row set of partition k is exactly
   * `pmod(hash(pk), bucketNum) == k` (guaranteed by the write path), which is
   * Spark's own `HashPartitioning.partitionIdExpression`. The post-planner
   * rule uses that to declare `HashPartitioning`/`SortOrder` and elide
   * exchanges/sorts on PK joins and aggregations
-  * (reference `SetPartitionAndOrdering.scala:52-140`).
+  * (reference `SetPartitionAndOrdering.scala:52-140`). A scan whose pushed
+  * equality / IN conjuncts pin fewer buckets (reference `BucketParquetScan`)
+  * plans only those, and `files` holds only their files.
   *
   * Fully compacted buckets stream parquet batches through unchanged
   * (columnar, whole-stage-codegen friendly); buckets with delta files run a
@@ -120,7 +132,8 @@ case class GraftPkScan(
     mergeOperatorNames: Map[String, String],
     streamIgnoreChanges: Boolean = false,
     streamOptions: Map[String, String] = Map.empty,
-    forceMergeLayout: Boolean = false)
+    forceMergeLayout: Boolean = false,
+    plannedBuckets: Option[Seq[Int]] = None)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeV2Filtering {
 
@@ -180,7 +193,8 @@ case class GraftPkScan(
 
   override def description(): String = {
     val mode = if (scanNeedsMerge) "merge-on-read" else "compacted"
-    s"GraftPkScan $tablePath [$mode, buckets=${tableInfo.bucketNum}, " +
+    val planned = plannedBuckets.fold(tableInfo.bucketNum)(_.size)
+    s"GraftPkScan $tablePath [$mode, buckets=$planned/${tableInfo.bucketNum}, " +
       s"files=${files.size}, pushedPkFilters=${pushedPkFilters.mkString(",")}]"
   }
 
@@ -230,76 +244,6 @@ case class GraftPkScan(
     }
   }
 
-  /** Buckets this scan can possibly hit, or None when not every hash column
-    * is pinned by equality. Candidate values per column come from the pushed
-    * static conjuncts (point/IN lookups) AND from runtime DPP value sets —
-    * intersected when both pin the same column. The write path places a key
-    * at `pmod(murmur3(pk), bucketNum)` (Spark's own
-    * `HashPartitioning.partitionIdExpression` — `TransactionalWrite.writePk`
-    * relies on it), so the same hash computed over the literals identifies
-    * the ONLY bucket that can hold each key. This is the pruning file-level
-    * stats can NEVER do for bucketed tables: hash scattering makes every
-    * bucket file's pk [min, max] span the whole domain. */
-  private def pointLookupBuckets: Option[Set[Int]] = {
-    val hashCols = tableInfo.hashColumns
-    val fieldOf = tableInfo.dataSchema.fields
-      .map(f => f.name.toLowerCase -> f).toMap
-    // per-column equality candidate values from the pushed conjuncts
-    // (EXTERNAL Scala values — Literal.create converts)
-    def staticLits(c: String, dt: DataType): Option[Seq[
-        org.apache.spark.sql.catalyst.expressions.Literal]] = {
-      pushedPkFilters.collectFirst {
-        case org.apache.spark.sql.sources.EqualTo(a, v)
-            if a.equalsIgnoreCase(c) && v != null => Seq(v)
-        case org.apache.spark.sql.sources.EqualNullSafe(a, v)
-            if a.equalsIgnoreCase(c) && v != null => Seq(v)
-        case org.apache.spark.sql.sources.In(a, vs)
-            if a.equalsIgnoreCase(c) && vs != null && vs.nonEmpty &&
-              vs.forall(_ != null) && vs.length <= 64 => vs.toSeq
-      }.map(_.map(v =>
-        org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)))
-    }
-    // runtime DPP values are already INTERNAL — wrap directly
-    def runtimeLits(c: String, dt: DataType): Option[Seq[
-        org.apache.spark.sql.catalyst.expressions.Literal]] =
-      runtimePkValues.get(c.toLowerCase).map(_.toSeq.filter(_ != null)
-        .map(v => org.apache.spark.sql.catalyst.expressions.Literal(v, dt)))
-    def litsFor(c: String): Option[Seq[
-        org.apache.spark.sql.catalyst.expressions.Literal]] = {
-      val dt = fieldOf.get(c.toLowerCase).map(_.dataType).getOrElse(return None)
-      (staticLits(c, dt), runtimeLits(c, dt)) match {
-        case (Some(s), Some(r)) => // both pin the column: intersect values
-          val sv = s.map(_.value).toSet
-          Some(r.filter(l => sv.contains(l.value)))
-        case (s, r) => r.orElse(s)
-      }
-    }
-    val perCol = hashCols.map(litsFor)
-    if (perCol.exists(_.isEmpty)) return None
-    // size check BEFORE expanding the cartesian; runtime IN sets can be an
-    // entire dim table's keys — hashing 100k literals is trivial driver
-    // work, but an unbounded cross-column product is not. Overflow-safe:
-    // a plain Long product of several 100k-element columns wraps (possibly
-    // below the cap) and would wave an astronomical expansion through.
-    val product = perCol.map(_.get.length.toLong).foldLeft(1L) { (acc, n) =>
-      try Math.multiplyExact(acc, n)
-      catch { case _: ArithmeticException => return None }
-    }
-    if (product > 100000L) return None
-    val tuples = perCol.map(_.get)
-      .foldLeft(Seq(Seq.empty[org.apache.spark.sql.catalyst.expressions.Literal])) {
-        (acc, vs) => acc.flatMap(t => vs.map(t :+ _))
-      }
-    try {
-      val n = tableInfo.bucketNum
-      Some(tuples.map { lits =>
-        val hash = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(lits)
-          .eval(null).asInstanceOf[Int]
-        ((hash % n) + n) % n
-      }.toSet)
-    } catch { case _: Exception => None }
-  }
-
   /** Drop whole (range partition) file groups whose manifest partition
     * value cannot match a runtime IN set. NULL partition values never match
     * an IN (join keys with NULL never join), so they drop too. */
@@ -323,16 +267,17 @@ case class GraftPkScan(
     val mergeIdx = mergeReadSchema.fieldNames.zipWithIndex.toMap
     val tz = castToImpl(sparkSession).sessionState.conf.sessionLocalTimeZone
     val proj = UnsafeProjection.create(readPartitionSchema)
-    // bucket pruning: partition COUNT stays bucketNum (the post-planner
-    // rule declares HashPartitioning with partition index == bucket id),
-    // but buckets a pinned key cannot hash to get EMPTY partitions — zero
-    // IO, the distribution contract intact
+    // runtime bucket pruning: the partition COUNT stays what planning
+    // declared (the post-planner rule's declared distribution rests on
+    // it), but buckets a runtime key cannot hash to get EMPTY partitions —
+    // zero IO, the distribution contract intact
     val byBucket0 = runtimeKeptFiles.groupBy(_.bucket)
-    val byBucket = pointLookupBuckets match {
+    val byBucket = GraftPkScan.pinnedBuckets(tableInfo, pushedPkFilters,
+        runtimePkValues) match {
       case Some(keep) => byBucket0.view.filterKeys(keep).toMap
       case None => byBucket0
     }
-    (0 until tableInfo.bucketNum).map { b =>
+    plannedBuckets.getOrElse(0 until tableInfo.bucketNum).map { b =>
       val groups = byBucket.getOrElse(b, Nil).groupBy(_.rangeKey).toSeq
         .sortBy(_._1).map { case (_, gfiles) =>
           val head = gfiles.head
@@ -732,6 +677,69 @@ class KWayMergeIterator(
 }
 
 object GraftPkScan {
+  /** Buckets a scan can possibly hit, or None when not every hash column
+    * is pinned by equality. Candidate values per column come from the pushed
+    * static conjuncts (point/IN lookups) AND from runtime DPP value sets
+    * (`runtime`, keyed by lower-cased column) — intersected when both pin
+    * the same column. Without runtime values this is the plan-time pin that
+    * chooses `plannedBuckets`. The write path places a key at
+    * `pmod(murmur3(pk), bucketNum)` (Spark's own
+    * `HashPartitioning.partitionIdExpression` — `TransactionalWrite.writePk`
+    * relies on it), so the same hash computed over the literals identifies
+    * the ONLY bucket that can hold each key. This is the pruning file-level
+    * stats can NEVER do for bucketed tables: hash scattering makes every
+    * bucket file's pk [min, max] span the whole domain. */
+  private[graft] def pinnedBuckets(
+      tableInfo: TableInfo, pushed: Seq[Filter],
+      runtime: Map[String, Set[Any]] = Map.empty): Option[Set[Int]] = {
+    val fieldOf = tableInfo.dataSchema.fields
+      .map(f => f.name.toLowerCase -> f).toMap
+    def litsFor(c: String): Option[Seq[Literal]] = {
+      val dt = fieldOf.get(c.toLowerCase).map(_.dataType).getOrElse(return None)
+      // per-column equality candidate values from the pushed conjuncts
+      // (EXTERNAL Scala values — Literal.create converts)
+      val pushedLits = pushed.collectFirst {
+        case org.apache.spark.sql.sources.EqualTo(a, v)
+            if a.equalsIgnoreCase(c) && v != null => Seq(v)
+        case org.apache.spark.sql.sources.EqualNullSafe(a, v)
+            if a.equalsIgnoreCase(c) && v != null => Seq(v)
+        case org.apache.spark.sql.sources.In(a, vs)
+            if a.equalsIgnoreCase(c) && vs != null && vs.nonEmpty &&
+              vs.forall(_ != null) && vs.length <= 64 => vs.toSeq
+      }.map(_.map(v => Literal.create(v, dt)))
+      // runtime DPP values are already INTERNAL — wrap directly
+      val runtimeLits = runtime.get(c.toLowerCase)
+        .map(_.toSeq.filter(_ != null).map(v => Literal(v, dt)))
+      (pushedLits, runtimeLits) match {
+        case (Some(s), Some(r)) => // both pin the column: intersect values
+          val sv = s.map(_.value).toSet
+          Some(r.filter(l => sv.contains(l.value)))
+        case (s, r) => r.orElse(s)
+      }
+    }
+    val perCol = tableInfo.hashColumns.map(litsFor)
+    if (perCol.exists(_.isEmpty)) return None
+    // size check BEFORE expanding the cartesian; runtime IN sets can be an
+    // entire dim table's keys — hashing 100k literals is trivial driver
+    // work, but an unbounded cross-column product is not. Overflow-safe:
+    // a plain Long product of several 100k-element columns wraps (possibly
+    // below the cap) and would wave an astronomical expansion through.
+    val product = perCol.map(_.get.length.toLong).foldLeft(1L) { (acc, n) =>
+      try Math.multiplyExact(acc, n)
+      catch { case _: ArithmeticException => return None }
+    }
+    if (product > 100000L) return None
+    val tuples = perCol.map(_.get)
+      .foldLeft(Seq(Seq.empty[Literal])) { (acc, vs) => acc.flatMap(t => vs.map(t :+ _)) }
+    try {
+      val n = tableInfo.bucketNum
+      Some(tuples.map { lits =>
+        val hash = new Murmur3Hash(lits).eval(null).asInstanceOf[Int]
+        ((hash % n) + n) % n
+      }.toSet)
+    } catch { case _: Exception => None }
+  }
+
   /** Deep nullable view of a schema. Retained for the per-FILE parquet read
     * request (any single file may legitimately lack a column — the
     * vectorized reader null-fills OPTIONAL missing columns but throws for

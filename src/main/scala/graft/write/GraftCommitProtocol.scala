@@ -45,7 +45,6 @@ class GraftCommitProtocol(
     dataCols: Seq[String],
     isBase: Boolean,
     statsSchema: StructType, // empty => stats collection disabled
-    statsMaxCols: Int,
     bucketFromTaskId: Boolean)
   extends FileCommitProtocol with Serializable {
 
@@ -103,7 +102,7 @@ class GraftCommitProtocol(
       val (numRecords, mins, maxs, nulls) =
         if (statsSchema.isEmpty) (-1L, Map.empty[String, String],
           Map.empty[String, String], Map.empty[String, Long])
-        else graft.sources.FileStats.collect(p, conf, statsSchema, statsMaxCols)
+        else graft.sources.FileStats.collect(p, conf, statsSchema)
       DataFileInfo(
         path = relativePath(dir, p.getName),
         partitionValues = values,

@@ -70,14 +70,11 @@ object TransactionalWrite extends org.apache.spark.internal.Logging {
 
     val statsEnabled = spark.conf.getOption("spark.graft.stats.enabled")
       .forall(_.toBoolean)
-    val statsMaxCols = spark.conf.getOption("spark.graft.stats.maxCols")
-      .map(_.toInt).getOrElse(graft.sources.FileStats.DEFAULT_MAX_COLS)
     val protocol = new GraftCommitProtocol(
       tablePath = tablePath,
       dataCols = cols.filterNot(rangeCols.contains),
       isBase = isBase,
       statsSchema = if (statsEnabled) tableInfo.dataSchema else new StructType(),
-      statsMaxCols = statsMaxCols,
       bucketFromTaskId = tableInfo.hasPrimaryKey)
 
     executeWrite(spark, tablePath, arranged, rangeCols, protocol,

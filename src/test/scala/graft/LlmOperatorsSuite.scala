@@ -319,6 +319,19 @@ class LlmOperatorsSuite extends GraftFunSuite {
       info(s"cluster $c: 6 queries probe ${probed.size} of $nCentroids cells")
       assert(probed.nonEmpty && probed.size < nCentroids,
         s"cluster $c's queries probed $probed")
+      // only probed cells' vectors fold: the cid filter sits below the
+      // collect_list aggregate that builds each uvec
+      val folds = got.queryExecution.optimizedPlan.collect {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+            if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[
+              org.apache.spark.sql.catalyst.expressions.aggregate.CollectList])) => a
+      }
+      assert(folds.nonEmpty && folds.forall(_.exists {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          f.condition.references.exists(_.name == "cid")
+        case _ => false
+      }), s"cluster $c: the uvec fold reads unprobed cells:\n" +
+        got.queryExecution.optimizedPlan)
       def rows(d: org.apache.spark.sql.DataFrame) =
         d.select("qid", "rank", "nid").as[(Long, Int, Long)].collect().toSet
       assert(rows(got) == rows(Ann.bruteTopK(df, "vec_id", "embedding",

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -299,6 +300,132 @@ class PlanQualitySuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
         assert(sorts.isEmpty,
           s"expected sort-free SMJ:\n${joined.queryExecution.executedPlan}")
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  /** Writes `1..500` as `(id, v = id)` into a PK table of 8 buckets. */
+  private def writePk(dir: String): Unit = {
+    import spark.implicits._
+    (1 to 500).map(i => (i.toLong, i)).toDF("id", "v").write.format("graft")
+      .option("hashPartitions", "id").option("hashBucketNum", "8").save(dir)
+  }
+
+  /** Bucket of each key as the write path places it: its
+    * `repartition(bucketNum, pk)` sends a row to `pmod(hash(pk), n)`. */
+  private def bucketOf(keys: Seq[Long], n: Int): Map[Long, Int] = {
+    import spark.implicits._
+    keys.toDF("id").select(col("id"), pmod(hash(col("id")), lit(n)))
+      .as[(Long, Int)].collect().toMap
+  }
+
+  /** The smallest key of each of the first `m` buckets 1..500 reach. */
+  private def keysInDistinctBuckets(m: Int): Seq[Long] =
+    bucketOf(1L to 500L, 8).groupBy(_._2).toSeq.sortBy(_._1).take(m)
+      .map(_._2.keys.min)
+
+  private def pkPartitions(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.flatMap(_.inputPartitions).map(_.asInstanceOf[graft.sources.GraftPkInputPartition])
+
+  /** The distributions `DeclareBucketDistribution` declares on the scans of
+    * `df`, read under an aggregate on the key: the rule runs in adaptive
+    * planning, which a plan with no distribution requirement skips. */
+  private def declared(df: org.apache.spark.sql.DataFrame) =
+    collect(df.groupBy("id").count().queryExecution.executedPlan) {
+      case g: graft.rules.GraftClusteredExec => g.outputPartitioning
+    }
+
+  test("pk point and IN lookups plan only the buckets their keys hash to") {
+    import spark.implicits._
+    withTable { dir =>
+      writePk(dir)
+      val df = spark.read.format("graft").load(dir)
+      val point = df.filter($"id" === 42L)
+      assert(pkPartitions(point).map(_.bucket).toSeq == Seq(bucketOf(Seq(42L), 8)(42L)))
+      assert(point.collect().map(_.getInt(1)).toSeq == Seq(42))
+      assert(point.queryExecution.executedPlan.toString.contains("buckets=1/8"))
+      assert(declared(point) == Seq(
+        org.apache.spark.sql.catalyst.plans.physical.SinglePartition))
+      val three = keysInDistinctBuckets(3)
+      val in3 = df.filter($"id".isin(three: _*))
+      assert(pkPartitions(in3).map(_.bucket).toSeq == three.map(bucketOf(three, 8)).sorted)
+      assert(in3.collect().map(_.getLong(0)).sorted.toSeq == three)
+      assert(declared(in3).isEmpty)
+      // a pin covering every bucket is no pin: all 8 planned, hash declared
+      val all = df.filter($"id".isin(keysInDistinctBuckets(8): _*))
+      assert(pkPartitions(all).length == 8)
+      assert(all.queryExecution.sparkPlan.toString.contains("buckets=8/8"))
+      assert(declared(all).map(_.numPartitions) == Seq(8))
+      assert(pkPartitions(df.filter($"v" === 42)).length == 8)
+    }
+  }
+
+  test("pinned pk scans: pinned join pinned plans no exchange; pinned join " +
+      "unpruned answers correctly") {
+    import spark.implicits._
+    withTable { dir =>
+      writePk(dir)
+      def load = spark.read.format("graft").load(dir)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val pinned = load.filter($"id" === 42L).select($"id", $"v".as("a"))
+          .join(load.filter($"id" === 42L).select($"id", $"v".as("b")), "id")
+        assert(pinned.collect().toSeq == Seq(Row(42L, 42, 42)))
+        val plan = pinned.queryExecution.executedPlan
+        assert(collect(plan) {
+          case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        }.isEmpty, s"pinned ⋈ pinned must not shuffle:\n$plan")
+        val three = keysInDistinctBuckets(3)
+        Seq(load.filter($"id" === 42L), load.filter($"id".isin(three: _*)))
+          .foreach { p =>
+            val j = p.select($"id", $"v".as("a"))
+              .join(load.select($"id", $"v".as("b")), "id")
+            val keys = p.collect().map(_.getLong(0)).sorted.toSeq
+            assert(j.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+              .sorted.toSeq == keys.map(k => (k, k.toInt, k.toInt)))
+          }
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("writes fed by a key-pinned scan keep every row in its bucket's file") {
+    import spark.implicits._
+    withTable { dir =>
+      writePk(dir)
+      val target = s"$dir-insert"
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.catalog.spark_catalog", "graft.catalog.GraftCatalog")
+      s2.sql(s"CREATE TABLE pq_pinned_insert (id BIGINT, v INT) USING graft " +
+        s"LOCATION '$target' " +
+        "TBLPROPERTIES('hashPartitions'='id', 'hashBucketNum'='8')")
+      try {
+        def load = spark.read.format("graft").load(dir)
+        val three = keysInDistinctBuckets(3)
+        val table = graft.tables.GraftTable.forPath(spark, dir)
+        table.upsert(load.filter($"id".isin(three: _*)).withColumn("v", $"v" + 1000))
+        table.upsert(load.filter($"id" === 500L).withColumn("v", $"v" + 2000))
+        s2.sql(s"INSERT INTO pq_pinned_insert SELECT id, v FROM graft.`$dir` " +
+          s"WHERE id IN (${three.mkString(", ")})")
+        // every row of a file hashes to the file's bucket, the placement of
+        // the write path's repartition(bucketNum, pk)
+        Seq(dir, target).foreach { path =>
+          graft.tables.GraftTable.forPath(spark, path).snapshot.files.foreach { f =>
+            val buckets = spark.read.parquet(f.resolvedPath(path))
+              .select(pmod(hash($"id"), lit(8))).distinct().as[Int].collect()
+            assert(buckets.forall(_ == f.bucket),
+              s"${f.path} of bucket ${f.bucket} holds rows of buckets ${buckets.toSeq}")
+          }
+        }
+        val expect = three.map(k => (k, k.toInt + 1000)) :+ (500L -> 2500)
+        assert(load.filter($"id".isin(three :+ 500L: _*)).as[(Long, Int)]
+          .collect().sorted.toSeq == expect.sorted)
+        assert(spark.read.format("graft").load(target).as[(Long, Int)]
+          .collect().sorted.toSeq == three.map(k => (k, k.toInt + 1000)))
+      } finally {
+        s2.sql("DROP TABLE IF EXISTS pq_pinned_insert")
+        graft.write.TransactionalWrite.deleteRecursively(java.nio.file.Paths.get(target))
+      }
     }
   }
 
