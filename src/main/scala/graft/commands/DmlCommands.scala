@@ -279,12 +279,14 @@ object ApplyChangesCommand {
       require(pk.forall(k => dataCols.exists(_.equalsIgnoreCase(k))),
         s"applyChanges: change batch must carry the key columns " +
         s"[${info.hashColumns.mkString(", ")}]")
-      val live = latest.filter(!isDel)
-        .select(dataCols.toSeq.map(c => col(s"`$c`")): _*)
-      val tomb = latest.filter(isDel)
-        .select(pk.map(c => col(s"`$c`")) :+
-          lit(true).as(graft.meta.Tombstones.COL): _*)
-      val delta = live.unionByName(tomb, allowMissingColumns = true)
+      // one projection over the winners: a delete keeps its key and
+      // carries the tombstone marker, every other winner keeps its data
+      // with a null marker (two filtered branches unioned would compute
+      // the per-key window, and its shuffle, once per branch)
+      val delta = latest.select(dataCols.toSeq.map { c =>
+        if (pk.exists(_.equalsIgnoreCase(c))) col(s"`$c`")
+        else when(!isDel, col(s"`$c`")).as(c)
+      } :+ when(isDel, lit(true)).as(graft.meta.Tombstones.COL): _*)
       UpsertCommand.runDeltaIn(spark, path, delta, writeOptions, txn)
     }
     if (spark.conf.getOption("spark.graft.compaction.auto")
@@ -989,10 +991,9 @@ object CleanupCommand {
       retainMillis: Long,
       dryRun: Boolean): Seq[String] = {
     val cutoff = System.currentTimeMillis() - retainMillis
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      graft.write.GraftFs.conf(spark))
+    val hconf = graft.write.GraftFs.conf(spark)
     val root = new HPath(path)
-    val fs = root.getFileSystem(hconf.value)
+    val fs = root.getFileSystem(hconf)
     // live set keyed by FULLY-QUALIFIED path string so the listed files
     // (qualified by the same FileSystem) compare exactly; deletion vectors
     // referenced by the snapshot are as live as their data files
@@ -1026,11 +1027,12 @@ object CleanupCommand {
       if (dirs.isEmpty) Nil
       else {
         val liveB = spark.sparkContext.broadcast(live)
+        val confB = graft.write.GraftFs.broadcastConf(spark, hconf)
         val doDelete = !dryRun
         spark.sparkContext
           .parallelize(dirs.map(_.getPath.toUri.toString),
             math.min(dirs.size, 64))
-          .flatMap(d => orphansUnder(new HPath(d), hconf.value, liveB.value,
+          .flatMap(d => orphansUnder(new HPath(d), confB.value.value, liveB.value,
             cutoff, doDelete))
           .collect().toSeq
       }

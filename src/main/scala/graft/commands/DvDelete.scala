@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.And
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkShims
-import org.apache.spark.util.SerializableConfiguration
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.meta.{DataFileInfo, GraftTableNotFoundException, Snapshot, SnapshotManagement, TableInfo}
@@ -122,15 +121,15 @@ object DvSupport {
     // ---- build + write vectors executor-side -------------------------
     val oldDv = candidates.iterator.filter(_.hasDv).map(f =>
       RewriteSupport.stripScheme(f.resolvedPath(path)) -> f.dvPath).toMap
-    val hconf = new SerializableConfiguration(GraftFs.conf(spark))
+    val hconf = GraftFs.broadcastConf(spark)
     val results: Array[(String, String, Long)] = matched
       .groupByKey(_._1)
       .mapGroups { (file, it) =>
         val bm = new Roaring64Bitmap()
         it.foreach(t => bm.addLong(t._2))
         oldDv.get(file).foreach(rel =>
-          bm.or(DeletionVectors.read(path, hconf.value, rel)))
-        val rel = DeletionVectors.write(path, hconf.value, bm)
+          bm.or(DeletionVectors.read(path, hconf.value.value, rel)))
+        val rel = DeletionVectors.write(path, hconf.value.value, bm)
         (file, rel, bm.getLongCardinality)
       }
       .collect()

@@ -16,7 +16,7 @@ import graft.sources.GraftTableV2
   * rejects non-file V2 sources.
   */
 case class ResolveGraftPathTable(spark: SparkSession) extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+  import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, V2WriteCommand}
 
   private def graftPathParts(parts: Seq[String]): Boolean =
     parts.length == 2 && parts.head.equalsIgnoreCase("graft") &&
@@ -30,13 +30,20 @@ case class ResolveGraftPathTable(spark: SparkSession) extends Rule[LogicalPlan] 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
     case u @ UnresolvedRelation(parts, _, _) if graftPathParts(parts) =>
       relationFor(parts)
-    // `df.writeTo("graft.`/path`")`: a V2 write command's TABLE is a bare
-    // field, not a child, so the operator traversal above never reaches it.
+    // `df.writeTo("graft.`/path`")` and SQL `INSERT INTO graft.`/path``: a
+    // write command's TABLE is a bare field, not a child, so the operator
+    // traversal above never reaches it.
     case w: V2WriteCommand if !w.table.resolved =>
       w.table match {
         case UnresolvedRelation(parts, _, _) if graftPathParts(parts) =>
           w.withNewTable(relationFor(parts))
         case _ => w
+      }
+    case i: InsertIntoStatement if !i.table.resolved =>
+      i.table match {
+        case UnresolvedRelation(parts, _, _) if graftPathParts(parts) =>
+          i.copy(table = relationFor(parts))
+        case _ => i
       }
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory}
@@ -32,8 +33,7 @@ import graft.meta.FsMetaStore
 class DvMaskedBatch(
     inner: ParquetScan,
     dvByAbsPath: Map[String, String],
-    tableRoot: String,
-    hadoopConf: Configuration)
+    tableRoot: String)
   extends Batch {
 
   require(inner.pushedAggregate.isEmpty,
@@ -88,7 +88,7 @@ class DvMaskedBatch(
   override def createReaderFactory(): PartitionReaderFactory =
     new DvMaskedReaderFactory(baseBatch.createReaderFactory(),
       idxBatch.createReaderFactory(), idxOrd, idxRowTypes, tableRoot,
-      new SerializableConfiguration(hadoopConf),
+      graft.write.GraftFs.broadcastConf(inner.sparkSession),
       // Spark requires every partition of a scan to agree on columnar vs
       // row-based; one surviving masked partition forces the whole scan
       // row-based (pruning that drops every DV'd file keeps it columnar)
@@ -113,7 +113,7 @@ class DvMaskedReaderFactory(
     idxOrd: Int,
     idxRowTypes: Array[DataType],
     tableRoot: String,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     anyMasked: Boolean)
   extends PartitionReaderFactory {
 
@@ -134,7 +134,7 @@ class DvMaskedReaderFactory(
     p match {
       case DvCleanPartition(inner) => base.createReader(inner)
       case DvMaskedPartition(inner, dvRel) =>
-        val bm = DeletionVectors.read(tableRoot, conf.value, dvRel)
+        val bm = DeletionVectors.read(tableRoot, conf.value.value, dvRel)
         val raw = withIdx.createReader(inner)
         // strip the row-index column (mid-row: partition values follow it)
         val proj = UnsafeProjection.create(

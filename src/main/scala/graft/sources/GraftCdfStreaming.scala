@@ -475,11 +475,11 @@ case class GraftCdfReaderFactory(
     * the row-index column stripped back out. */
   private def dvSelectedRows(d: CdfDvPartition): Iterator[InternalRow] = {
     val s = inner.dvSupport
-    val dvNew = DeletionVectors.read(s.tableRoot, s.conf.value, d.dvNew)
+    val dvNew = DeletionVectors.read(s.tableRoot, s.conf.value.value, d.dvNew)
     val delta =
       if (d.dvOld.isEmpty) dvNew
       else org.roaringbitmap.longlong.Roaring64Bitmap.andNot(dvNew,
-        DeletionVectors.read(s.tableRoot, s.conf.value, d.dvOld))
+        DeletionVectors.read(s.tableRoot, s.conf.value.value, d.dvOld))
     val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
       d.partValues, org.apache.spark.paths.SparkPath.fromPathString(d.absPath),
       0, d.length, Array.empty, 0L, d.length, Map.empty)

@@ -467,12 +467,12 @@ class GraftMicroBatchStream(
         options = Map(org.apache.spark.sql.execution.datasources.FileFormat
           .OPTION_RETURNING_BATCH -> "false"),
         hadoopConf = ioConf)
-    val dvSupport = GraftStreamDvSupport(
-      tablePath,
-      new org.apache.spark.util.SerializableConfiguration(
-        graft.write.GraftFs.conf(spark)),
-      idxOrd = dataCols.length,
-      rowTypes = (dvCols.fields ++ partSchema.fields).map(_.dataType))
+    val dvSupport = if (tableInfo.hasPrimaryKey) null else
+      GraftStreamDvSupport(
+        tablePath,
+        graft.write.GraftFs.broadcastConf(spark),
+        idxOrd = dataCols.length,
+        rowTypes = (dvCols.fields ++ partSchema.fields).map(_.dataType))
     // tombstone-marker support: marker-bearing files (re-emitted only under
     // ignoreChanges) read with the marker column appended so the reader can
     // withhold delete-marker rows and strip the column back out. Mutually
@@ -547,7 +547,8 @@ case class GraftStreamFilesPartition(
   * layout's types (for the strip projection). */
 case class GraftStreamDvSupport(
     tableRoot: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
     idxOrd: Int,
     rowTypes: Array[org.apache.spark.sql.types.DataType])
 
@@ -611,7 +612,7 @@ case class GraftStreamReaderFactory(
     } else if (dvRel.isEmpty) rawRows(readFunc, pf)
     else {
       val s = dvSupport
-      val bm = DeletionVectors.read(s.tableRoot, s.conf.value, dvRel)
+      val bm = DeletionVectors.read(s.tableRoot, s.conf.value.value, dvRel)
       val proj = UnsafeProjection.create(
         s.rowTypes.indices.filterNot(_ == s.idxOrd).map(i =>
           org.apache.spark.sql.catalyst.expressions.BoundReference(
@@ -711,8 +712,7 @@ class GraftStreamableScan(
       // partition filters have already been folded into the delegate)
       case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
           if dvByPath.nonEmpty =>
-        new DvMaskedBatch(p, dvByPath, tablePath,
-          graft.write.GraftFs.conf(spark))
+        new DvMaskedBatch(p, dvByPath, tablePath)
       case _ => delegate.toBatch
     }
   override def supportedCustomMetrics():

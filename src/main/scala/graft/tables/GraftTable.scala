@@ -159,7 +159,7 @@ class GraftTable private (spark: SparkSession, val path: String) {
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       selfHealSchemaEvolution: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, lit, max, when}
+    import org.apache.spark.sql.functions.{col, count, lit, max, when}
     val session = spark
     val dest = graft.meta.SnapshotManagement.normalize(destPath)
     require(graft.meta.SnapshotManagement.exists(dest),
@@ -202,53 +202,54 @@ class GraftTable private (spark: SparkSession, val path: String) {
       cdf.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // persisted: the batch feeds THREE consumers (schema check, the
-          // applied-version probe, the apply) — without it the CDF window
-          // re-reads per consumer
+          // persisted: the batch feeds two jobs (the row count + applied-
+          // version probe, then the apply) — without it the CDF window
+          // re-reads per job. One aggregate answers both "is the window
+          // empty" and "which source version does it reach".
           val b = batch.persist()
-          try if (!b.isEmpty) {
-            // a streaming source PINS its schema at start: a source table
-            // that gained a column mid-stream would replicate with that
-            // column silently DROPPED (verified: the rows land, the new
-            // column vanishes). Fail the batch loudly instead — same
-            // restart-on-schema-change contract Delta's streams have
-            // (self-healing mode catches exactly this failure and
-            // restarts the reader against the same checkpoint).
-            val seen = b.columns.map(_.toLowerCase).toSet
-            val nowCols = graft.meta.SnapshotManagement.snapshot(srcNorm)
-              .tableInfo.schema.fieldNames.toSeq
-            val unseen = nowCols.filterNot(c => seen.contains(c.toLowerCase))
-            if (unseen.nonEmpty) throw new GraftTable.ReplicationSchemaEvolved(
-              s"${GraftTable.EVOLVED_SENTINEL} replication source " +
-              s"$srcNorm gained column(s) " +
-              s"[${unseen.mkString(", ")}] after the stream started; " +
-              "restart replicateTo (same checkpoint) to pick up the new " +
-              "schema — continuing would silently drop them from the replica")
-            // lag surface: the newest SOURCE version in this window rides
-            // the apply commit itself as a (txnAppId, txnVersion) pair —
-            // replayed into the replica's snapshot, so replicationStatus
-            // reads it from the LOG: any driver, any MetaStore, no
-            // driver-local sidecar. The same pair is the commit layer's
-            // idempotence guard, so a checkpoint-replayed window (whose
-            // apply already landed) skips instead of re-appending.
-            val mv = b.agg(max(col(ChangeFeed.COMMIT_VERSION)))
+          try {
+            val stats = b.agg(count(lit(1)), max(col(ChangeFeed.COMMIT_VERSION)))
               .collect().head
-            val txnOpts =
-              if (mv.isNullAt(0)) Map.empty[String, String]
-              else Map(
+            if (stats.getLong(0) > 0) {
+              // a streaming source PINS its schema at start: a source table
+              // that gained a column mid-stream would replicate with that
+              // column silently DROPPED (verified: the rows land, the new
+              // column vanishes). Fail the batch loudly instead — same
+              // restart-on-schema-change contract Delta's streams have
+              // (self-healing mode catches exactly this failure and
+              // restarts the reader against the same checkpoint).
+              val seen = b.columns.map(_.toLowerCase).toSet
+              val nowCols = graft.meta.SnapshotManagement.snapshot(srcNorm)
+                .tableInfo.schema.fieldNames.toSeq
+              val unseen = nowCols.filterNot(c => seen.contains(c.toLowerCase))
+              if (unseen.nonEmpty) throw new GraftTable.ReplicationSchemaEvolved(
+                s"${GraftTable.EVOLVED_SENTINEL} replication source " +
+                s"$srcNorm gained column(s) " +
+                s"[${unseen.mkString(", ")}] after the stream started; " +
+                "restart replicateTo (same checkpoint) to pick up the new " +
+                "schema — continuing would silently drop them from the replica")
+              // lag surface: the newest SOURCE version in this window rides
+              // the apply commit itself as a (txnAppId, txnVersion) pair —
+              // replayed into the replica's snapshot, so replicationStatus
+              // reads it from the LOG: any driver, any MetaStore, no
+              // driver-local sidecar. The same pair is the commit layer's
+              // idempotence guard, so a checkpoint-replayed window (whose
+              // apply already landed) skips instead of re-appending.
+              val txnOpts = Map(
                 WriteIntoTable.TXN_APP_ID ->
                   (GraftTable.REPLICATION_APP_PREFIX + srcNorm),
-                WriteIntoTable.TXN_VERSION -> mv.getLong(0).toString)
-            // mergeSchema: after a schema-change restart the replayed
-            // window carries the source's NEW columns — the replica must
-            // follow, not reject the batch
-            ApplyChangesCommand.run(session, tablePath,
-              b.drop("_commit_timestamp"),
-              opCol = ChangeFeed.CHANGE_TYPE,
-              sequenceCols = Seq("_commit_version", "__graft_seq2"),
-              deleteOps = Seq("delete"),
-              writeOptions =
-                Map(WriteIntoTable.MERGE_SCHEMA -> "true") ++ txnOpts)
+                WriteIntoTable.TXN_VERSION -> stats.getLong(1).toString)
+              // mergeSchema: after a schema-change restart the replayed
+              // window carries the source's NEW columns — the replica must
+              // follow, not reject the batch
+              ApplyChangesCommand.run(session, tablePath,
+                b.drop("_commit_timestamp"),
+                opCol = ChangeFeed.CHANGE_TYPE,
+                sequenceCols = Seq("_commit_version", "__graft_seq2"),
+                deleteOps = Seq("delete"),
+                writeOptions =
+                  Map(WriteIntoTable.MERGE_SCHEMA -> "true") ++ txnOpts)
+            }
           } finally b.unpersist()
         }
         .trigger(trigger)

@@ -2,6 +2,7 @@ package graft.write
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
@@ -16,6 +17,18 @@ object GraftFs {
 
   def conf(spark: SparkSession): Configuration =
     spark.sessionState.newHadoopConf()
+
+  /** `hconf` shipped to executors once, as a broadcast (Spark's own
+    * `ParquetFileFormat` idiom). Task closures and reader factories carry
+    * the small handle: a `SerializableConfiguration` captured directly
+    * re-serializes the whole conf (about 34 KB) into every task, and each
+    * task pays tens of milliseconds to deserialize it. */
+  def broadcastConf(spark: SparkSession, hconf: Configuration)
+      : Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
+
+  def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    broadcastConf(spark, conf(spark))
 
   def fs(path: String, hadoopConf: Configuration): FileSystem =
     new Path(path).getFileSystem(hadoopConf)
@@ -39,14 +52,14 @@ object GraftFs {
       val f = fs(root, hconf)
       relPaths.filterNot(rel => f.exists(new Path(root, rel)))
     } else {
-      val ser = new SerializableConfiguration(hconf)
+      val confB = broadcastConf(spark, hconf)
       val missingSet = spark.sparkContext
         .parallelize(relPaths, math.min(64, 1 + relPaths.length / 256))
         .mapPartitions { it =>
           val paths = it.toSeq
           if (paths.isEmpty) Iterator.empty
           else {
-            val f = new Path(root).getFileSystem(ser.value)
+            val f = new Path(root).getFileSystem(confB.value.value)
             paths.iterator.filterNot(rel => f.exists(new Path(root, rel)))
           }
         }

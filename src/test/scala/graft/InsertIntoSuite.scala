@@ -207,4 +207,23 @@ class InsertIntoSuite extends GraftFunSuite {
       assert(rows(t) == Seq(Seq(9L, "x")))
     }
   }
+
+  private def pathRows(dir: String): Seq[Seq[Any]] =
+    rowsOf(spark.read.format("graft").load(dir).select("id", "data"))
+
+  test("SQL INSERT INTO a graft.`/path` table appends") {
+    withTempTable { dir =>
+      src((1L, "a")).write.format("graft").save(dir)
+      spark.sql(s"INSERT INTO graft.`$dir` SELECT 2L AS id, 'b' AS data")
+      assert(pathRows(dir) == Seq(Seq(1L, "a"), Seq(2L, "b")))
+    }
+  }
+
+  test("SQL INSERT OVERWRITE a graft.`/path` table replaces its rows") {
+    withTempTable { dir =>
+      src((1L, "a"), (2L, "b")).write.format("graft").save(dir)
+      spark.sql(s"INSERT OVERWRITE graft.`$dir` VALUES (3L, 'c')")
+      assert(pathRows(dir) == Seq(Seq(3L, "c")))
+    }
+  }
 }

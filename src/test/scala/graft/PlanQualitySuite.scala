@@ -633,4 +633,101 @@ class PlanQualitySuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"hashed-key shuffle ($hashedBytes B) must be smaller than " +
         s"string-key shuffle ($strungBytes B)")
   }
+
+  /** Java-serialized size of `o`: what a task ships for each reader
+    * factory or closure it carries. */
+  private def serializedBytes(o: AnyRef): Int = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(o)
+    oos.close()
+    bos.size()
+  }
+
+  private def readerFactories(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.batch.createReaderFactory()
+    }
+
+  // every task carries its reader factory; a Hadoop conf serialized inside
+  // one alone is about 34 KB. Measured: the change-feed factories are
+  // about 4.8 KB (non-PK) and 5.6 KB (PK), the DV-masking factory 4.3 KB.
+  private val FactoryBytesBound = 8 * 1024
+
+  test("change-feed and DV-masking reader factories ship the Hadoop conf " +
+      "by broadcast, not inline") {
+    import spark.implicits._
+    withTable { dir =>
+      (0 until 200).map(i => (i.toLong, i)).toDF("id", "v")
+        .write.format("graft").save(dir)
+      graft.tables.GraftTable.forPath(spark, dir).delete(col("id") === 7L)
+      val feed = readerFactories(graft.tables.ChangeFeed.changes(spark, dir, 0L))
+      val masked = readerFactories(spark.read.format("graft").load(dir))
+      assert(masked.exists(_.isInstanceOf[graft.sources.DvMaskedReaderFactory]),
+        s"expected a DV-masked scan, got $masked")
+      (feed ++ masked).foreach { f =>
+        val n = serializedBytes(f)
+        info(s"${f.getClass.getSimpleName}: $n bytes")
+        assert(n < FactoryBytesBound, s"${f.getClass.getSimpleName}: $n bytes")
+      }
+    }
+    withTable { dir =>
+      (0 until 200).map(i => (i.toLong, i)).toDF("id", "v").write.format("graft")
+        .option("hashPartitions", "id").option("hashBucketNum", "4").save(dir)
+      val t = graft.tables.GraftTable.forPath(spark, dir)
+      t.upsert(Seq((1L, -1)).toDF("id", "v"))
+      t.delete(col("id") === 2L)
+      val feed = readerFactories(graft.tables.ChangeFeed.changes(spark, dir, 0L))
+      assert(feed.nonEmpty)
+      feed.foreach { f =>
+        val n = serializedBytes(f)
+        info(s"${f.getClass.getSimpleName}: $n bytes")
+        assert(n < FactoryBytesBound, s"${f.getClass.getSimpleName}: $n bytes")
+      }
+    }
+  }
+
+  test("applyChanges plans its per-key window, and its exchange, once") {
+    import spark.implicits._
+    withTable { dir =>
+      (0 until 20).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+        .write.format("graft")
+        .option("hashPartitions", "id").option("hashBucketNum", "2").save(dir)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+        org.apache.spark.sql.execution.SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(name: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          if (name == "graft write") plans.add(qe.executedPlan)
+        override def onFailure(name: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        graft.tables.GraftTable.forPath(spark, dir).applyChanges(
+          Seq((1L, "x", "upsert", 1L), (1L, "y", "upsert", 2L),
+              (2L, null, "delete", 1L), (30L, "new", "upsert", 1L))
+            .toDF("id", "v", "op", "seq"),
+          "op", Seq("seq"))
+        val deadline = System.currentTimeMillis() + 10000L
+        while (plans.isEmpty && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+      } finally spark.listenerManager.unregister(listener)
+      assert(plans.size == 1, s"expected one write, saw ${plans.size}")
+      val plan = plans.peek()
+      val windows = collect(plan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+      val windowExchanges = windows.flatMap(w => collect(w) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      })
+      assert(windows.size == 1 && windowExchanges.size == 1,
+        s"expected one window over one exchange:\n$plan")
+      assert(spark.read.format("graft").load(dir).as[(Long, String)]
+        .collect().toMap == (0 until 20).map(i => (i.toLong, s"v$i")).toMap
+        .updated(1L, "y").removed(2L).updated(30L, "new"))
+    }
+  }
 }

@@ -170,4 +170,47 @@ class StreamingSinkSuite extends GraftFunSuite {
         s"each distinct content must land exactly once: $got")
     }
   }
+
+  test("replicateTo: an empty micro-batch commits nothing; a window that " +
+      "inserts, updates and deletes one key leaves the replica equal") {
+    withTempTable { src => withTempTable { scratch =>
+      import org.apache.spark.sql.functions.col
+      val dest = scratch + "/replica"
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.format("graft")
+        .option("hashPartitions", "id").option("hashBucketNum", "2")
+        .save(src)
+      val t = GraftTable.forPath(spark, src)
+      t.cloneTo(dest)
+      def version(p: String) = graft.meta.SnapshotManagement.snapshot(
+        graft.meta.SnapshotManagement.normalize(p)).version
+      def state(p: String) = spark.read.format("graft").load(p)
+        .as[(Long, String)].collect().toMap
+      val q = t.replicateTo(dest, scratch + "/ckpt",
+        Trigger.ProcessingTime("100 milliseconds"))
+      try {
+        // a compaction commit yields no change rows: its micro-batch is
+        // empty and must not reach the replica's log
+        t.upsert(Seq((2L, "b2")).toDF("id", "v"))
+        q.processAllAvailable()
+        val replicaAt = version(dest)
+        t.compaction()
+        val compacted = version(src)
+        q.processAllAvailable()
+        assert(q.lastProgress.sources.head.endOffset == compacted.toString,
+          s"the stream must have read past v$compacted: ${q.lastProgress.json}")
+        assert(version(dest) == replicaAt, "an empty window committed")
+        // one window: insert, update and delete the same key
+        q.stop()
+        t.upsert(Seq((3L, "c")).toDF("id", "v"))
+        t.upsert(Seq((3L, "c2")).toDF("id", "v"))
+        t.delete(col("id") === 3L)
+        val q2 = t.replicateTo(dest, scratch + "/ckpt",
+          Trigger.ProcessingTime("100 milliseconds"))
+        try q2.processAllAvailable() finally q2.stop()
+        assert(state(dest) == state(src),
+          s"replica diverged:\n src ${state(src)}\n dst ${state(dest)}")
+        assert(state(dest) == Map(1L -> "a", 2L -> "b2"))
+      } finally q.stop()
+    } }
+  }
 }

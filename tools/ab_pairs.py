@@ -7,11 +7,11 @@ For each seed A..B it runs `perfbench/run.py --trace 0` once in each
 checkout, alternating which checkout goes first, so drift on a shared
 machine falls on both sides alike. Both runs of a pair use the same seed and
 the `run_seconds` of the change's BENCHMARK.json. It then prints, for every
-end-to-end metric of that BENCHMARK.json, the parent's median and quartile
-spread (Q3 - Q1, from `statistics.quantiles(values, n=4)`, the quartiles
-`perfbench/steady.py` uses), the change's median, the relative delta of the
-medians, and in how many pairs the change was better (in the metric's
-`better` direction).
+end-to-end metric of that BENCHMARK.json, each side's first quartile,
+median and third quartile (from `statistics.quantiles(values, n=4)`, the
+quartiles `perfbench/steady.py` uses), the parent's quartile spread
+(Q3 - Q1), the relative delta of the medians, and in how many pairs the
+change was better (in the metric's `better` direction).
 
 Exit status 1 when any run is not `correct` (or fails to report), 0
 otherwise; the figures are printed either way for the runs that finished.
@@ -82,19 +82,22 @@ def main():
                 wins[m["name"]] += 1
     pairs = len(values["parent"][metrics[0]["name"]])
     print(f"\n{a.workload}: {pairs} pairs, seeds {a.seeds.start}-{a.seeds.stop - 1}")
-    print(f"{'metric':16s} {'parent med':>12s} {'parent IQR':>12s} {'change med':>12s} "
-          f"{'delta':>8s} {'wins':>7s}")
+    print(f"{'metric':16s} {'parent Q1':>10s} {'parent med':>10s} {'parent Q3':>10s} "
+          f"{'change Q1':>10s} {'change med':>10s} {'change Q3':>10s} "
+          f"{'parent IQR':>10s} {'delta':>8s} {'wins':>7s}")
     for m in metrics:
         name = m["name"]
         p, c = values["parent"][name], values["change"][name]
         if pairs < 2:
             print(f"{name:16s} needs at least 2 pairs for quartiles")
             continue
-        q1, pmed, q3 = statistics.quantiles(p, n=4)
-        cmed = statistics.median(c)
+        pq1, pmed, pq3 = statistics.quantiles(p, n=4)
+        cq1, cmed, cq3 = statistics.quantiles(c, n=4)
         delta = (cmed - pmed) / pmed if pmed else float("nan")
-        print(f"{name:16s} {pmed:12.2f} {q3 - q1:12.2f} {cmed:12.2f} {delta:+8.1%} "
-              f"{wins[name]:3d}/{pairs:<3d} ({m['unit']}, {m['better']} is better)")
+        print(f"{name:16s} {pq1:10.2f} {pmed:10.2f} {pq3:10.2f} "
+              f"{cq1:10.2f} {cmed:10.2f} {cq3:10.2f} {pq3 - pq1:10.2f} "
+              f"{delta:+8.1%} {wins[name]:3d}/{pairs:<3d} "
+              f"({m['unit']}, {m['better']} is better)")
     sys.exit(0 if ok else 1)
 
 
